@@ -1,6 +1,6 @@
 package graft.geo.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.geo.expr.geo
@@ -16,8 +16,8 @@ import graft.geo.expr.geo
   *  - tiling adds a LongType cell column inside whole-stage codegen;
   *  - the PIP join broadcasts (cell -> polygon) covers — polygons are the
   *    small side by construction — so the big fact table is never shuffled;
-  *  - the kNN join shuffles once on candidate cell, with the (2r+1)^2
-  *    neighborhood explode on the (small) query side only;
+  *  - the kNN join broadcasts the (small) query side and scans the data
+  *    side once, shuffling only ~k band survivors per query and partition;
   *  - skew: hot cells are detected from a sampled histogram and the salt
   *    factor applied on the *data* side, replicated on the probe side —
   *    plus AQE skew-join as backstop;
@@ -256,100 +256,160 @@ object GeoEngine {
 
   // --- kNN join -------------------------------------------------------------
 
-  /** k nearest data points for each query point.
-    *
-    * Plan: tile both sides at `level`; explode the query side into the
-    * (2r+1)^2 cell neighborhood (candidate generation — query side is the
-    * smaller by convention); equi-join on cell (one shuffle, AQE-skew
-    * tolerant); rank candidates per query by squared chord distance with a
-    * total-order tie-break on data id; keep row_number <= k.
-    *
-    * Correctness bound: a neighborhood of radius r at `level` covers all
-    * true neighbors within ~r * cellWidth(level); callers size (level, r)
-    * for their distance budget, or use [[knnBruteForce]] when data is
-    * small enough to broadcast.  Ties break on (dist, id) so output is
-    * partition-independent. */
-  /** Exact geodesic top-k over candidate pairs, with a chord-distance
-    * prefilter: squared 3D chord (on the unit sphere of GEODETIC angles)
-    * is exactly monotone in the unit-sphere central angle, and the
-    * ellipsoidal geodesic distance per unit of that angle ranges over
-    * [b^2/a, a^2/b] (meridional radius at the equator ... at the pole;
-    * the zonal rate N*cos(phi)/cos(phi)=N lies inside), so two
-    * candidates can reorder only while their LINEAR chords are within
-    * (a/b)^3 ~ 1.0101 of each other — 1.0204 on SQUARED chords.  Keeping
-    * the kth-chord value x 1.022 (margin over 1.0204 for the arc-vs-
-    * chord curvature residual) and geodesic-ranking the survivors is
-    * therefore exact, while the expensive Karney solve runs on ~k rows
-    * per query instead of every candidate.  (The former 1.0068 band was
-    * the LINEAR (a/b)^2 local bound applied to squared chords — off by
-    * both the square and the global-vs-local radius range; a meridional
-    * candidate could be wrongly pruned in favor of a farther zonal one.) */
-  /** Exact kth-smallest value with map-side combine — the partial-
-    * aggregable replacement for a full row_number window over every
-    * candidate row.  Buffer: b(0)=n, b(1..n)=a binary MAX-heap of the
-    * current n smallest values (root at b(1), children of i at 2i/2i+1),
-    * so insert is O(log k) — the former unordered buffer scanned all k
-    * slots per insert, quadratic pain past small k.  Order-insensitive,
-    * so results stay partition-count independent. */
-  private final class KthSmallest(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Double, Array[Double], Double] {
-    def zero: Array[Double] = new Array[Double](k + 1)
-    private def siftUp(b: Array[Double], i0: Int): Unit = {
-      var i = i0
-      while (i > 1 && b(i / 2) < b(i)) {
-        val t = b(i); b(i) = b(i / 2); b(i / 2) = t; i /= 2
+  /** Squared-chord reorder band of the exact kNN join.  Squared 3D chord
+    * (on the unit sphere of GEODETIC angles) is exactly monotone in the
+    * unit-sphere central angle, and the ellipsoidal geodesic distance per
+    * unit of that angle ranges over [b^2/a, a^2/b] (meridional radius at
+    * the equator ... at the pole; the zonal rate N*cos(phi)/cos(phi)=N
+    * lies inside), so two rows can reorder only while their LINEAR chords
+    * are within (a/b)^3 ~ 1.0101 of each other — 1.0204 on SQUARED
+    * chords.  Keeping every row within 1.022x (margin over 1.0204 for the
+    * arc-vs-chord curvature residual) of a query's kth-smallest chord^2
+    * therefore keeps its whole geodesic top k, and the Karney solve runs
+    * on ~k rows per query.  Shared by [[knnJoin]]'s partition scan and its
+    * merge. */
+  private val KnnChordBand = 1.022
+
+  /** One query's state while [[knnJoin]] scans a data partition: the k
+    * smallest squared chords seen so far (ascending) and every row whose
+    * chord^2 is within the band of the current kth.  `cut` is +Inf until
+    * k rows were seen and only shrinks afterwards, so kept rows are
+    * re-filtered when the buffer fills and once more in `survivors`. */
+  private final class ChordBand(k: Int) {
+    private val best = new Array[Double](k)
+    private var seen = 0
+    private var cds = new Array[Double](k + 8)
+    private var rows = new Array[Row](k + 8)
+    private var n = 0
+    var cut: Double = Double.PositiveInfinity
+
+    /** Keep `r` at squared chord `c`; the caller has checked `c <= cut`. */
+    def offer(c: Double, r: Row): Unit = {
+      if (seen < k || c < best(k - 1)) {
+        var i = math.min(seen, k - 1)
+        while (i > 0 && best(i - 1) > c) { best(i) = best(i - 1); i -= 1 }
+        best(i) = c
+        if (seen < k) seen += 1
+        if (seen == k) cut = best(k - 1) * KnnChordBand + 1e-12
       }
-    }
-    private def siftDown(b: Array[Double], n: Int): Unit = {
-      var i = 1; var done = false
-      while (!done) {
-        val l = 2 * i; val r = l + 1; var m = i
-        if (l <= n && b(l) > b(m)) m = l
-        if (r <= n && b(r) > b(m)) m = r
-        if (m == i) done = true
-        else { val t = b(i); b(i) = b(m); b(m) = t; i = m }
+      if (n == cds.length) {
+        var m = 0
+        for (i <- 0 until n if cds(i) <= cut) { cds(m) = cds(i); rows(m) = rows(i); m += 1 }
+        n = m
+        if (2 * n > cds.length) {
+          cds = java.util.Arrays.copyOf(cds, 2 * cds.length)
+          rows = java.util.Arrays.copyOf(rows, 2 * rows.length)
+        }
       }
+      cds(n) = c; rows(n) = r; n += 1
     }
-    private def insert(b: Array[Double], v: Double): Unit = {
-      val n = b(0).toInt
-      if (n < k) { b(n + 1) = v; b(0) = n + 1; siftUp(b, n + 1) }
-      else if (v < b(1)) { b(1) = v; siftDown(b, k) }
-    }
-    def reduce(b: Array[Double], v: Double): Array[Double] = { insert(b, v); b }
-    def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
-      var i = 1; val n2 = b2(0).toInt
-      while (i <= n2) { insert(b1, b2(i)); i += 1 }
-      b1
-    }
-    def finish(b: Array[Double]): Double = {
-      val n = b(0).toInt
-      if (n < k) Double.PositiveInfinity else b(1)
-    }
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder: org.apache.spark.sql.Encoder[Double] =
-      org.apache.spark.sql.Encoders.scalaDouble
+
+    def survivors: Iterator[(Double, Row)] =
+      Iterator.range(0, n).filter(i => cds(i) <= cut).map(i => (cds(i), rows(i)))
   }
 
-  private[graft] def geodesicTopK(pairs: DataFrame, k: Int, queryId: String,
-                           dataId: String): DataFrame = {
+  /** k nearest data points per query, ranked by exact Karney geodesic
+    * distance with ties broken on data id.  Output
+    * (queryId, dataId, dist, rank), independent of the partition count.
+    *
+    * One exact scan, no cells:
+    *   1. the queries with both coordinates are collected to the driver
+    *      EAGERLY — when `knnJoin` is called, not when its result runs —
+    *      and broadcast with their unit-sphere (x,y,z);
+    *   2. one `mapPartitions` over the data side (x,y,z from the scan
+    *      projection, as in [[distanceJoin]]) compares every row with
+    *      every query and keeps, per query, the rows within
+    *      [[KnnChordBand]] of that partition's kth chord^2.  A partition
+    *      holds a subset of the data, so its local kth is never below the
+    *      global kth, and the kept rows are a superset of the global band;
+    *   3. one shuffle by query re-applies the band against the global kth
+    *      (a window over partitions x ~k rows per query), solves Karney on
+    *      the survivors and ranks them by (dist, dataId).
+    * Rows with a null coordinate on either side never appear in the
+    * output; a query with fewer than k data rows gets all of them.
+    *
+    * Cost model: Q·N chord evaluations of three multiply-adds each, plus
+    * O(Q·k) state per task, and the Q queries must fit on the driver.
+    * Every in-repo caller has Q <= 2,000 (2,000 x 1M points in
+    * [[graft.Bench]]) except the self-join in
+    * [[SpatialStats.annStat]], which is quadratic in its point count.
+    *
+    * `level` is ignored; it remains so that callers passing a cell level
+    * still compile. */
+  def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int = 0,
+              queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cd = chord2(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
-    val withCd = pairs.withColumn("cd", cd)
-    // phase 1: kth chord per query as a partial-aggregable agg — the big
-    // candidate set is reduced map-side; only (query, kth) rows shuffle.
-    // Infinity when a query has under k candidates (then nothing prunes).
-    val kthAgg = udaf(new KthSmallest(k))
-    val kth = withCd.groupBy(queryId).agg(kthAgg(col("cd")).as("cd_k"))
-    // phase 2: keep the chord-ball that provably contains the geodesic
-    // top-k (squared-chord reorder band (a/b)^6 ~ 1.0204, see the
-    // Scaladoc derivation; 1.022 adds curvature margin), then rank
-    val pruned = withCd.join(broadcast(kth), Seq(queryId))
-      .where(col("cd") <= col("cd_k") * 1.022 + 1e-12)
-    val dist = geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    require(k >= 1, s"knnJoin k must be >= 1, got $k")
+    // (id, p_lon, p_lat, p_x, p_y, p_z) for the rows with both coordinates
+    def points(df: DataFrame, id: String, p: String): DataFrame =
+      df.select(col(id), col("lon").cast("double").as("lon"),
+          col("lat").cast("double").as("lat"))
+        .where(col("lon").isNotNull && col("lat").isNotNull)
+        .select(col(id) +: xyzCols("lon", "lat", p): _*)
+    val qb = data.sparkSession.sparkContext.broadcast(
+      points(queries, queryId, "q").collect())
+    val cand = points(data, dataId, "d").rdd.mapPartitions { rows =>
+      val qs = qb.value
+      val qx = qs.map(_.getDouble(3))
+      val qy = qs.map(_.getDouble(4))
+      val qz = qs.map(_.getDouble(5))
+      val bands = Array.fill(qs.length)(new ChordBand(k))
+      rows.foreach { r =>
+        val x = r.getDouble(3); val y = r.getDouble(4); val z = r.getDouble(5)
+        var j = 0
+        while (j < qs.length) {
+          val dx = qx(j) - x; val dy = qy(j) - y; val dz = qz(j) - z
+          val c = dx * dx + dy * dy + dz * dz
+          if (c <= bands(j).cut) bands(j).offer(c, r)
+          j += 1
+        }
+      }
+      qs.iterator.zip(bands.iterator).flatMap { case (q, b) =>
+        b.survivors.map { case (c, r) =>
+          Row(q.get(0), r.get(0), q.get(1), q.get(2), r.get(1), r.get(2), c)
+        }
+      }
+    }
+    val schema = StructType(
+      Seq(StructField(queryId, queries.schema(queryId).dataType),
+        StructField(dataId, data.schema(dataId).dataType)) ++
+        Seq("q_lon", "q_lat", "d_lon", "d_lat", "cd").map(StructField(_, DoubleType)))
+    val byChord = Window.partitionBy(col(queryId)).orderBy(col("cd"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val byDist = Window.partitionBy(col(queryId))
+      .orderBy(col("dist").asc, col(dataId).asc)
+    data.sparkSession.createDataFrame(cand, schema)
+      .withColumn("cd_k", nth_value(col("cd"), k).over(byChord))
+      .where(col("cd_k").isNull || col("cd") <= col("cd_k") * KnnChordBand + 1e-12)
+      .withColumn("dist",
+        geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat")))
+      .withColumn("rank", row_number().over(byDist))
+      .where(col("rank") <= k)
+      .select(col(queryId), col(dataId), col("dist"), col("rank"))
+  }
+
+  /** Exact kNN by broadcast cross join — the small-data baseline and the
+    * correctness oracle for [[knnJoin]].  Every pair of rows with both
+    * coordinates is ranked by Karney distance (`geodesic = false`: by
+    * squared chord), then by data id, in one window: no band, nothing
+    * shared with the code it checks.  Rows with a null coordinate on
+    * either side never appear in the output. */
+  def knnBruteForce(queries: DataFrame, data: DataFrame, k: Int,
+                    queryId: String = "query_id", dataId: String = "data_id",
+                    geodesic: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    def located(df: DataFrame) = df.where(col("lon").isNotNull && col("lat").isNotNull)
+    val d = broadcast(located(data).select(col(dataId),
+      col("lon").as("d_lon"), col("lat").as("d_lat")))
+    val q = located(queries)
+      .select(col(queryId), col("lon").as("q_lon"), col("lat").as("q_lat"))
+    val dist =
+      if (geodesic) geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
+      else chord2(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("dist").asc, col(dataId).asc)
-    pruned
+    q.crossJoin(d)
       .withColumn("dist", dist)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -362,169 +422,6 @@ object GeoEngine {
     * corner, times the polar radius — then a 0.5 safety factor. */
   def ringSafeRadius(level: Int, ring: Int): Double =
     ring * math.pow(2.0, -level) * (4.0 / 3.0) * 0.5 * 6356752.3 * 0.5
-
-  /** k nearest data points per query — adaptive cell-ring expansion.
-    *
-    * Each pass tiles both sides at `level`, explodes the query side into
-    * the (2r+1)^2 neighborhood, equi-joins on cell (one shuffle per pass,
-    * only pending queries re-join) and ranks by geodesic distance with a
-    * total-order (dist, id) tie-break.  A query is settled when it found k
-    * candidates whose kth distance is within the geometrically guaranteed
-    * covered radius of ring r; unsettled queries escalate to ring 3r, and
-    * after `maxPasses` the stragglers (isolated points) fall back to the
-    * broadcast brute-force.  Output is partition-count independent. */
-  def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int,
-              ring: Int = 1, maxPasses: Int = 8,
-              queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
-    // Flat design: pass 1 joins every query at the finest level in one
-    // job; each unsettled query is then assigned its own escalation level
-    // from the pass-1 evidence (candidate count + kth distance found),
-    // and at most two further multi-level joins settle them — every query
-    // probes at its own rung inside ONE job per pass.  Stragglers that
-    // are still unsettled at the coarsest rung fall back to the broadcast
-    // brute force.  Driver-synchronized actions: ~4, independent of the
-    // ladder depth — the old per-rung loop serialized ~4 jobs per rung on
-    // the driver, which dominated wall time and would throttle thousands
-    // of concurrent queries on a cluster.
-    require(level >= 2 && level <= graft.geo.cells.CellIndex.MaxUsableLevel,
-      s"knnJoin level must be in [2, ${graft.geo.cells.CellIndex.MaxUsableLevel}], got $level")
-    require(maxPasses >= 1, s"knnJoin maxPasses must be >= 1, got $maxPasses")
-    val ladder = (level to 2 by -3).take(maxPasses)
-    val coarsest = ladder.last
-    // tile + project the data side at the finest level; coarser join keys
-    // are derived by parent-cell bit-chopping — no re-tiling.  Not cached:
-    // each pass is one map-side scan of the source (at corpus scale a
-    // cache of the full projection is neither possible nor useful).
-    val fineData = tiled(data, level)
-      .select(col(dataId), col("lon").as("d_lon"), col("lat").as("d_lat"),
-        col("cell").as("fine_cell"))
-    val q0 = queries.select(col(queryId), col("lon"), col("lat"))
-
-    /** Escalation-level choice from a pass's evidence (columns n_cand /
-      * kth_dist / lvl): n==k -> the finest rung whose guarantee radius
-      * covers the kth distance found (an upper bound on the true kth, so
-      * settling there is certain); n<k -> 2D density extrapolation with
-      * 4x headroom, at least one rung coarser.  NULL lvl marks a query
-      * that can only be settled by brute force. */
-    def escalate(p: DataFrame): DataFrame = {
-      val byKth = ladder.init.foldRight(lit(coarsest): Column) { (l, els) =>
-        when(col("kth_dist") <= lit(ringSafeRadius(l, ring)), lit(l)).otherwise(els)
-      }
-      val nC = coalesce(col("n_cand"), lit(0L))
-      val steps = greatest(lit(1),
-        ceil(log(lit(4.0) * (k + 1) / greatest(nC, lit(1L))) / log(lit(64.0)))
-          .cast("int"))
-      val byDensity = least(col("lvl") - 3, lit(level) - lit(3) * steps)
-      val next = greatest(lit(coarsest),
-        when(nC === k, least(byKth, col("lvl") - 3)).otherwise(byDensity))
-      p.withColumn("lvl",
-          when(col("lvl") <= coarsest, lit(null)).otherwise(next).cast("int"))
-        .select(col(queryId), col("lon"), col("lat"), col("lvl"))
-    }
-
-    val safeOf: Column = ladder.init.foldRight(
-      lit(ringSafeRadius(coarsest, ring)): Column) { (l, els) =>
-      when(col("lvl") === l, lit(ringSafeRadius(l, ring))).otherwise(els)
-    }
-
-    /** One candidate pass where each query probes at its own level
-      * (pend: queryId, lon, lat, lvl).  Returns (settled top-k rows,
-      * still-pending queries with their evidence columns), or nulls when
-      * nothing was pending.  Costs one tiny collect (distinct levels) and
-      * one broadcast join; the data side derives one parent-cell key per
-      * active level map-side (cell ids carry their level in the low bits,
-      * so a plain cand_cell equi-join cannot mix levels). */
-    def passAt(pend: DataFrame): (DataFrame, DataFrame) = {
-      val lvls = pend.select("lvl").distinct().collect().map(_.getInt(0))
-      if (lvls.isEmpty) return (null, null)
-      val dataMulti = lvls.toList.map { l =>
-        if (l == level) fineData.withColumnRenamed("fine_cell", "cand_cell")
-        else fineData.withColumn("cand_cell", geo.cellParent(col("fine_cell"), l))
-          .drop("fine_cell")
-      }.reduce(_ unionByName _)
-      val q = lvls.toList.map { l =>
-        pend.where(col("lvl") === l)
-          .withColumn("cand_cell",
-            explode(geo.cellNeighbors(geo.cellId(col("lon"), col("lat"), l), ring)))
-          .select(col(queryId), col("lon").as("q_lon"),
-            col("lat").as("q_lat"), col("cand_cell"))
-      }.reduce(_ unionByName _)
-      val cand = geodesicTopK(broadcast(q).join(dataMulti, "cand_cell"),
-        k, queryId, dataId).cache()
-      val stats = cand.groupBy(queryId)
-        .agg(count(lit(1)).as("n_cand"), max("dist").as("kth_dist"))
-      val settledIds = stats
-        .join(pend.select(col(queryId), safeOf.as("safe")), Seq(queryId))
-        .where(col("n_cand") === k && col("kth_dist") <= col("safe"))
-        .select(queryId)
-      // materialize both outputs eagerly (each is at most #queries x k
-      // rows), then release the pass's candidate cache — without this the
-      // cached partitions of every pass pile up across a job sequence and
-      // the GC churn makes run times non-reproducible (round-2 verdict)
-      val out = cand.join(broadcast(settledIds), queryId)
-        .select(col(queryId), col(dataId), col("dist"), col("rank"))
-        .localCheckpoint(true)
-      val still = pend.join(broadcast(settledIds), Seq(queryId), "left_anti")
-        .join(broadcast(stats), Seq(queryId), "left")
-        .localCheckpoint(true)
-      cand.unpersist()
-      (out, still)
-    }
-
-    val (out1, still1) = passAt(q0.withColumn("lvl", lit(level)))
-    var outs = List(Option(out1)).flatten
-    // passAt already checkpoints its outputs (lineage truncation + cache
-    // release), so escalate — a pure projection — needs no re-checkpoint
-    var pending =
-      if (still1 == null) null else escalate(still1)
-    // bounded escalation passes — the per-query byKth rule usually jumps
-    // straight to the settling rung, so most runs stop after one or two;
-    // an exhausted pass costs only a ~10-row collect.  NULL-lvl rows
-    // (ladder exhausted) short-circuit to the brute-force remainder.
-    var i = 0
-    while (i < ladder.length - 1 && pending != null) {
-      val (o, s) = passAt(pending.where(col("lvl").isNotNull))
-      outs = outs ++ Option(o)
-      val exhausted = pending.where(col("lvl").isNull)
-        .select(col(queryId), col("lon"), col("lat"), col("lvl"))
-      pending =
-        if (s == null) exhausted
-        else escalate(s).unionByName(exhausted)
-      i += 1
-    }
-    val rest =
-      if (pending == null || pending.isEmpty) null
-      else knnBruteForce(
-        pending.select(col(queryId), col("lon"), col("lat")), data, k,
-        queryId, dataId)
-    // an empty query set yields no passes at all — fall back to an empty
-    // frame with the contract schema instead of reducing an empty list
-    (outs ++ Option(rest)).reduceOption(_ unionByName _)
-      .getOrElse(knnBruteForce(q0.limit(0), data, k, queryId, dataId))
-  }
-
-  /** Exact kNN by broadcast cross join — the small-data baseline and the
-    * correctness oracle for [[knnJoin]]. */
-  def knnBruteForce(queries: DataFrame, data: DataFrame, k: Int,
-                    queryId: String = "query_id", dataId: String = "data_id",
-                    geodesic: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d = broadcast(data.select(col(dataId),
-      col("lon").as("d_lon"), col("lat").as("d_lat")))
-    val q = queries.select(col(queryId), col("lon").as("q_lon"), col("lat").as("q_lat"))
-    val pairs = q.crossJoin(d)
-    if (geodesic) geodesicTopK(pairs, k, queryId, dataId)
-    else {
-      val w = Window.partitionBy(col(queryId))
-        .orderBy(col("dist").asc, col(dataId).asc)
-      pairs
-        .withColumn("dist",
-          chord2(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat")))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select(col(queryId), col(dataId), col("dist"), col("rank"))
-    }
-  }
 
   /** The finest cell level whose ring-1 neighborhood provably covers a
     * disc of `radiusMeters` around any point in the center cell (the
@@ -561,7 +458,7 @@ object GeoEngine {
     *   - chord^2 > rejectCap: definitely outside (divisor 6.30e6 is below
     *     the minimum meters-per-radian rate b^2/a = 6.335e6, and the +2%
     *     band adds slack on top — rigorous independently of
-    *     [[geodesicTopK]]'s reorder band).
+    *     [[knnJoin]]'s reorder band).
     *   - between: the exact Karney predicate — a thin annulus around the
     *     radius, so the expensive solve runs on a few % of candidates.
     * Consumers that only count rows never evaluate Karney outside the
@@ -777,7 +674,6 @@ object GeoEngine {
                   idCol: String = "traj_id", timeCol: String = "ts",
                   lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     require(maxDistMeters > 0, "maxDistMeters must be positive")
     val maxC2 = maxChord2For(maxDistMeters)
     val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxC2) / 2))
@@ -1228,7 +1124,7 @@ object GeoEngine {
                  maxRadiusMeters: Double = 200.0,
                  minDurationSeconds: Long = 1200L): DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     require(keys.nonEmpty, "stayPoints needs at least one key column")
     val k = keys.length
     val c2max = maxChord2For(maxRadiusMeters)

@@ -592,11 +592,12 @@ object SpatialStats {
     * supplies the study-area measure.
     *
     * Scale shape: the NN search is [[GeoEngine.knnJoin]] with k = 2
-    * (self rides along at distance 0 and is dropped) — the flat
-    * cell-ladder join, one map-side scan of the corpus per pass — then
-    * one exact-long aggregation.  Duplicate positions are genuine
-    * zero-distance neighbors. */
-  def annStat(pts: DataFrame, areaM2: Double, level: Int = 11,
+    * (self rides along at distance 0 and is dropped) — every point is a
+    * query, so the exact scan is QUADRATIC in the point count — then one
+    * exact-long aggregation.  For large n use [[annStatChord]], whose
+    * bounded cell-cover self-join scales.  Duplicate positions are
+    * genuine zero-distance neighbors. */
+  def annStat(pts: DataFrame, areaM2: Double,
               idCol: String = "pt_id", lonCol: String = "lon",
               latCol: String = "lat"): DataFrame = {
     require(areaM2 > 0, "areaM2 must be positive")
@@ -608,7 +609,7 @@ object SpatialStats {
     val nn = GeoEngine.knnJoin(base.select(col("pid").as("qid"),
           col("lon"), col("lat")),
         base.select(col("pid").as("did"), col("lon"), col("lat")),
-        k = 2, level = level, queryId = "qid", dataId = "did")
+        k = 2, queryId = "qid", dataId = "did")
       .where(col("did") =!= col("qid"))
       .groupBy("qid")
       .agg(min(floor(col("dist") * 1e6 + 0.5).cast("long")).as("nnd_um"))

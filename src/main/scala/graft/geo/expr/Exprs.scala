@@ -530,7 +530,7 @@ case class GeodesicDistExpr(first: Expression, second: Expression,
 }
 
 /** Karney geodesic direct problem: (lon1, lat1, azi deg, s12 m) ->
-  * struct(lon2, lat2, azi2) — cell-ring kNN radius expansion. */
+  * struct(lon2, lat2, azi2). */
 case class GeodesicDirectExpr(first: Expression, second: Expression,
                               third: Expression, fourth: Expression,
                               geod: graft.geo.geodesic.Geodesic)

@@ -213,24 +213,37 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cells.childrenAt(parent, 6).toSeq == Seq(parent))
   }
 
-  test("cell kNN matches brute force when ring covers the distance budget") {
+  test("kNN join matches brute force across partitionings, far and null queries, k > n") {
     val docs = GeoEngine.withGeoTag(corpus(2000, 4))
     val data = docs.select(col("doc_id").as("data_id"), col("lon"), col("lat"))
-    // queries: 30 docs re-used as query points (dense region guaranteed)
+    // queries: 30 docs re-used as query points (dense region guaranteed),
+    // plus one thousands of km from every corpus hotspot and one with a
+    // null coordinate (which must never appear in the output)
+    val s = spark; import s.implicits._
+    val extra = Seq[(String, java.lang.Double, java.lang.Double)](
+      ("far", -150.0, -60.0), ("nolat", 10.0, null))
+      .toDF("query_id", "lon", "lat")
     val queries = docs.limit(30)
       .select(col("doc_id").as("query_id"), col("lon"), col("lat"))
-    // level 4 cells are ~2000 km wide: ring 1 covers any plausible top-3
-    // in the clustered corpus
-    val cellKnn = GeoEngine.knnJoin(queries, data, k = 3, level = 4, ring = 1)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
-    val brute = GeoEngine.knnBruteForce(queries, data, k = 3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
-    assert(cellKnn == brute)
+      .unionByName(extra)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
+    val brute = rows(GeoEngine.knnBruteForce(queries, data, k = 3))
+    assert(brute.size == 31 * 3 && !brute.exists(_._1 == "nolat"))
+    // one data partition, several (per-partition band pruning), and the
+    // corpus's own partitioning must all give the brute-force answer
+    for (d <- Seq(data, data.repartition(1), data.repartition(7)))
+      assert(rows(GeoEngine.knnJoin(queries, d, k = 3)) == brute)
+    // k above the data size: every located data row, ranked, per query
+    val few = data.orderBy("data_id").limit(5)
+    val allFew = rows(GeoEngine.knnJoin(queries, few.repartition(3), k = 8))
+    assert(allFew == rows(GeoEngine.knnBruteForce(queries, few, k = 8)))
+    assert(allFew.size == 31 * 5)
   }
 
   test("neighborhood coverage guarantee holds across cube-face boundaries") {
-    // knnJoin's settling rule and distanceJoin's cover both assume: any
-    // point within ringSafeRadius(level, r) of a query lies in a cell of
+    // distanceJoin's cover assumes: any point within
+    // ringSafeRadius(level, r) of a query lies in a cell of
     // neighborhood(cellOf(query), r).  On one face that is plain grid
     // geometry; across a face edge the gnomonic warp distorts the
     // adjacent face's grid and the off-face cells are found by
@@ -285,12 +298,28 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val queries = Seq(("q", 0.0, 0.0)).toDF("query_id", "lon", "lat")
     val data = Seq(("A", 0.1, 0.0), ("B", 0.0, 0.1004))
       .toDF("data_id", "lon", "lat")
-    val top = GeoEngine.knnBruteForce(queries, data, k = 1).collect()
-    assert(top.length == 1 && top(0).getString(1) == "B",
-      s"rank-1 was ${top(0).getString(1)}, expected the meridional point B")
+    for (top <- Seq(GeoEngine.knnJoin(queries, data, k = 1).collect(),
+                    GeoEngine.knnBruteForce(queries, data, k = 1).collect()))
+      assert(top.length == 1 && top(0).getString(1) == "B",
+        s"rank-1 was ${top(0).getString(1)}, expected the meridional point B")
     val g = graft.geo.geodesic.Geodesic.WGS84
     assert(g.inverse(0.1004, 0.0, 0.0, 0.0).s12 <
            g.inverse(0.0, 0.1, 0.0, 0.0).s12) // sanity: B really is nearer
+  }
+
+  test("kNN skips a null-coordinate data row without losing true neighbours") {
+    // regression: a data row with a null coordinate used to make the
+    // brute-force oracle drop the true second neighbour b
+    val s = spark; import s.implicits._
+    val data = Seq[(String, java.lang.Double, java.lang.Double)](
+      ("a", 10.0, 10.0), ("b", 10.01, 10.0), ("n", null, null),
+      ("c", 10.02, 10.0)).toDF("data_id", "lon", "lat")
+    val queries = Seq(("q", 10.0, 10.001)).toDF("query_id", "lon", "lat")
+    for (got <- Seq(GeoEngine.knnBruteForce(queries, data, k = 2),
+                    GeoEngine.knnJoin(queries, data, k = 2),
+                    GeoEngine.knnJoin(queries, data.repartition(3), k = 2)))
+      assert(got.collect().map(r => (r.getString(1), r.getInt(3))).toSet ==
+        Set(("a", 1), ("b", 2)))
   }
 
   test("distance join matches the brute-force geodesic range filter") {
