@@ -28,31 +28,36 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // a failed oracle BUILDER must never cost the round's whole compare:
-    // risky builders are individually guarded inside SparkEntry.oracleSql
-    // (entries degrade to rows-only), and this outer net guarantees a
-    // well-formed oracle_sql.json lands even if map construction throws
-    val json =
-      try SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[verify] oracleSql construction failed: ${e.getMessage}")
-          "{}"
-      }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The oracle_sql.json body for `build`'s (query name -> SQL) map.  A
+    * failed oracle BUILDER must never cost the round's whole compare:
+    * risky builders are individually guarded inside SparkEntry.oracleSql
+    * (entries degrade to rows-only), and this outer net still writes
+    * well-formed JSON if map construction throws — as
+    * `{"_oracle_error": "<message>"}`, so lost coverage is visible in the
+    * file, not an empty map. */
+  private[graft] def oracleJson(build: => Map[String, String]): String =
+    try build.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[verify] oracleSql construction failed: ${e.getMessage}")
+        s"{${q("_oracle_error")}: ${q(String.valueOf(e.getMessage))}}"
+    }
 }

@@ -18,6 +18,10 @@ import graft.geo.expr.geo
   *    small side by construction — so the big fact table is never shuffled;
   *  - the kNN join broadcasts the (small) query side and scans the data
   *    side once, shuffling only ~k band survivors per query and partition;
+  *  - cell-cover radius joins (distance, co-location, DBSCAN, trajectory,
+  *    L envelope) share one private section: a guarded cover level, one
+  *    candidate join (data tiled once, probe fanned to its ring-1 cells,
+  *    per-row unit-sphere xyz) and one metre accept/reject band;
   *  - skew: hot cells are detected from a sampled histogram and the salt
   *    factor applied on the *data* side, replicated on the probe side —
   *    plus AQE skew-join as backstop;
@@ -416,6 +420,8 @@ object GeoEngine {
       .select(col(queryId), col(dataId), col("dist"), col("rank"))
   }
 
+  // --- cell-cover radius joins ----------------------------------------------
+
   /** Lower bound (metres) on the distance from any point in a cell to
     * outside its ring-r neighborhood at `level`.  Min ST-step 2^-level,
     * min quadratic dUV/dST = 4/3, min sphere dAngle/dUV = 1/2 at the face
@@ -424,84 +430,39 @@ object GeoEngine {
     ring * math.pow(2.0, -level) * (4.0 / 3.0) * 0.5 * 6356752.3 * 0.5
 
   /** The finest cell level whose ring-1 neighborhood provably covers a
-    * disc of `radiusMeters` around any point in the center cell (the
-    * coarsest that still prunes: one level finer would leak true pairs
-    * past the 9-cell candidate set). */
-  def distanceJoinLevel(radiusMeters: Double): Int = {
+    * disc of `coverMeters` (in [[ringSafeRadius]]'s polar-radius metres)
+    * around any point in the center cell — the coarsest that still
+    * prunes: one level finer would leak true pairs past the 9-cell
+    * candidate set.  Level 0's ring-1 neighborhood is the coarsest
+    * complete cover the scheme has; beyond its safe radius the candidate
+    * set (and the small-angle chord caps of [[metreBand]]) would silently
+    * LEAK true pairs, so this fails typed instead, with the caller's
+    * `advice` on what to use at that scale.
+    *
+    * Metre callers pass the radius itself: a geodesic of s metres spans
+    * at most s/(b^2/a) radians of geodetic angle, i.e. s·a/b ~ 1.0034 s
+    * of polar-radius metres, which [[ringSafeRadius]]'s 0.5 safety
+    * factor absorbs.  Chord callers convert with [[chordCoverMeters]]. */
+  private[engine] def coverLevel(coverMeters: Double, advice: String): Int = {
+    val safe = ringSafeRadius(0, 1)
+    require(coverMeters <= safe,
+      f"a $coverMeters%.0f m cover exceeds the cell-cover guarantee " +
+        f"($safe%.0f m); $advice")
     // start at the finest ENCODABLE level — a centimetre-scale radius
     // must select level 26 (whose cover still holds), not an
     // unencodable 27-30 that crashes CellIdExpr's level check
     var l = graft.geo.cells.CellIndex.MaxUsableLevel
-    while (l > 0 && ringSafeRadius(l, 1) < radiusMeters) l -= 1
+    while (l > 0 && ringSafeRadius(l, 1) < coverMeters) l -= 1
     l
   }
 
-  /** All (query, data) pairs within `radiusMeters` — the range-join
-    * sibling of [[knnJoin]] (reference: geodesic distance predicate,
-    * `src/geodesic.c` geod_inverse; the reference exposes it per-point,
-    * this lifts it to a distributed join).
-    *
-    * Shape: tile the data side once, map-side, at the finest level whose
-    * ring-1 neighborhood covers the query disc; explode each query into
-    * its <=9-cell neighborhood; equi-join on cell — ONE shuffle, or none
-    * on the data side when the query side is broadcastable — then filter
-    * with a three-way band test.  Both sides carry their unit-sphere
-    * (x,y,z) computed once per ROW in the scan projection, so the
-    * per-PAIR chord^2 is three subtractions and three multiplies (the
-    * data-side fan-out — one row joins many query covers in a dense
-    * corpus — would otherwise re-run six trig calls per pair):
-    *   - chord^2 <= acceptCap: definitely inside.  Rigorous bound: the
-    *     geodesic is no longer than the great-ellipse arc <= a(1+f^2/2)
-    *     per radian of geocentric angle, and the geodetic->geocentric
-    *     angle distortion is <= (1+e^2), so s <= 6,420,945 * theta_geo;
-    *     the 6.45e6 divisor leaves a 0.45% margin.
-    *   - chord^2 > rejectCap: definitely outside (divisor 6.30e6 is below
-    *     the minimum meters-per-radian rate b^2/a = 6.335e6, and the +2%
-    *     band adds slack on top — rigorous independently of
-    *     [[knnJoin]]'s reorder band).
-    *   - between: the exact Karney predicate — a thin annulus around the
-    *     radius, so the expensive solve runs on a few % of candidates.
-    * Consumers that only count rows never evaluate Karney outside the
-    * band (Catalyst prunes the `dist` projection); consumers that read
-    * `dist` pay one solve per OUTPUT row, which is the answer itself.
-    * The data side is never collected, cached, or re-shuffled: at 10^12
-    * rows each probe is one scan. */
-  def distanceJoin(queries: DataFrame, data: DataFrame, radiusMeters: Double,
-                   queryId: String = "query_id", dataId: String = "data_id",
-                   broadcastQueries: Boolean = true): DataFrame = {
-    require(radiusMeters > 0, "radiusMeters must be positive")
-    // coverage guarantee: level 0's ring-1 neighborhood is the coarsest
-    // complete cover this scheme has — beyond its safe radius the 9-cell
-    // candidate set (and the small-angle chord caps) silently LEAK true
-    // pairs, so fail typed instead.  Continental radii belong to a
-    // broadcast cross join, not a cell prefilter.
-    require(radiusMeters <= ringSafeRadius(0, 1),
-      f"radiusMeters=$radiusMeters%.0f exceeds the cell-cover guarantee " +
-        f"(${ringSafeRadius(0, 1)}%.0f m); use a broadcast cross join with " +
-        "a geodesic predicate for continental-scale radii")
-    val level = distanceJoinLevel(radiusMeters)
-    val d = tiled(data, level)
-      .select(col(dataId) +: col("cell").as("cand_cell") +:
-        xyzCols("lon", "lat", "d"): _*)
-    val q0 = queries
-      .select(col(queryId) +:
-        explode(geo.cellNeighbors(
-          geo.cellId(col("lon"), col("lat"), level), 1)).as("cand_cell") +:
-        xyzCols("lon", "lat", "q"): _*)
-    val q = if (broadcastQueries) broadcast(q0) else q0
-    def cap(divisorMeters: Double, band: Double): Double = {
-      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
-      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
-    }
-    val rejectCap = cap(6.30e6, 1.02)
-    val acceptCap = cap(6.45e6, 1.0)
-    val c2 = chord2Xyz("q", "d")
-    val dist = geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
-    q.join(d, "cand_cell")
-      .where(c2 <= lit(acceptCap) ||
-        (c2 <= lit(rejectCap) && dist <= lit(radiusMeters)))
-      .select(col(queryId), col(dataId), dist.as("dist"))
-  }
+  /** Cover radius for a squared unit-sphere chord bound: the chord's
+    * central angle theta = 2 asin(sqrt(c2)/2), on the equatorial radius,
+    * with 2% headroom.  [[ringSafeRadius]] measures angle on the polar
+    * radius b, so theta needs theta·b metres; theta·a·1.02 exceeds that
+    * by 2.3% (a/b = 1.0034), which keeps the 9-cell set complete. */
+  private[engine] def chordCoverMeters(maxChord2: Double): Double =
+    2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2)) * 6378137.0 * 1.02
 
   /** Per-row unit-sphere coordinates: lon/lat passthrough plus (x,y,z),
     * prefixed — computed once in the scan so pair-wise chord tests are
@@ -515,43 +476,133 @@ object GeoEngine {
   }
 
   /** Squared 3D chord from two prefixed xyz column sets: 3 subs + 3
-    * multiplies per pair (no trig, no Math.pow). */
-  private def chord2Xyz(a: String, b: String): Column = {
+    * multiplies per pair (no trig, no Math.pow).  Bit-identical to
+    * [[chord2]] on the same points: the x, y, z expressions and the
+    * summation order are the same, and Spark's `pow(v, 2)` is
+    * `StrictMath.pow`, which returns exactly `v * v`. */
+  private[engine] def chord2Xyz(a: String, b: String): Column = {
     def sq(u: String): Column =
       (col(s"${a}_$u") - col(s"${b}_$u")) * (col(s"${a}_$u") - col(s"${b}_$u"))
     sq("x") + sq("y") + sq("z")
   }
 
+  /** The metre radius test on a squared unit-sphere chord `c2` (geodetic
+    * angles), with the exact geodesic `dist` evaluated only in between:
+    *   - c2 <= acceptCap: definitely inside.  Rigorous bound: the
+    *     geodesic is no longer than the great-ellipse arc <= a(1+f^2/2)
+    *     per radian of geocentric angle, and the geodetic->geocentric
+    *     angle distortion is <= (1+e^2), so s <= 6,420,945 * theta_geo;
+    *     the 6.45e6 divisor leaves a 0.45% margin.
+    *   - c2 > rejectCap: definitely outside (divisor 6.30e6 is below the
+    *     minimum meters-per-radian rate b^2/a = 6.335e6, and the +2% band
+    *     adds slack on top — rigorous independently of [[knnJoin]]'s
+    *     reorder band).
+    *   - between: `dist <= radiusMeters` — a thin annulus around the
+    *     radius, so the Karney solve runs on a few % of candidates.
+    * Consumers that only count rows never evaluate Karney outside the
+    * band (Catalyst prunes the `dist` projection); consumers that read
+    * `dist` pay one solve per OUTPUT row, which is the answer itself. */
+  private def metreBand(c2: Column, dist: Column, radiusMeters: Double): Column = {
+    def cap(divisorMeters: Double, band: Double): Double = {
+      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
+      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
+    }
+    c2 <= lit(cap(6.45e6, 1.0)) ||
+      (c2 <= lit(cap(6.30e6, 1.02)) && dist <= lit(radiusMeters))
+  }
+
+  /** Candidate pairs of a cell-cover radius join at `level`: `data` is
+    * tiled once, map-side, and `probe` explodes into its <=9-cell ring-1
+    * neighborhood; the two equi-join on the cell plus `keys` — ONE
+    * shuffle per side, or none on the data side when `broadcastQueries`.
+    * Both frames hold `lon`, `lat` and the id/key columns the caller
+    * needs; the other columns pass through, and lon/lat leave as
+    * `q_`-prefixed (probe) and `d_`-prefixed (data) lon, lat, x, y, z
+    * ([[xyzCols]]), computed once per ROW in the scan, before the
+    * probe's fan-out.  The per-pair [[chord2Xyz]] is then three
+    * subtractions and three multiplies — the data-side fan-out (one row
+    * joins many probe covers in a dense corpus) would otherwise re-run
+    * six trig calls per pair.  A probe's neighbor cells are distinct, so
+    * each (probe, data) row pair matches at most once per key value: no
+    * dedup pass. */
+  private[engine] def coverPairs(probe: DataFrame, data: DataFrame, level: Int,
+                                 keys: Seq[String] = Nil,
+                                 broadcastQueries: Boolean = false): DataFrame = {
+    def rest(df: DataFrame): Seq[Column] =
+      df.columns.toSeq.filterNot(c => c == "lon" || c == "lat").map(col)
+    val cell = geo.cellId(col("lon"), col("lat"), level)
+    val d = data.select(rest(data) ++
+      (cell.as("cand_cell") +: xyzCols("lon", "lat", "d")): _*)
+    val q0 = probe.select(rest(probe) ++
+        (cell.as("cand_cell") +: xyzCols("lon", "lat", "q")): _*)
+      .withColumn("cand_cell", explode(geo.cellNeighbors(col("cand_cell"), 1)))
+    val q = if (broadcastQueries) broadcast(q0) else q0
+    q.join(d, keys :+ "cand_cell")
+  }
+
+  /** All (query, data) pairs within `radiusMeters` — the range-join
+    * sibling of [[knnJoin]] (reference: geodesic distance predicate,
+    * `src/geodesic.c` geod_inverse; the reference exposes it per-point,
+    * this lifts it to a distributed join).
+    *
+    * Shape: the [[coverPairs]] candidate join at the [[coverLevel]] of
+    * the radius, refined by the three-way [[metreBand]] (Karney only in
+    * a thin annulus).  The data side is never collected, cached, or
+    * re-shuffled: at 10^12 rows each probe is one scan. */
+  def distanceJoin(queries: DataFrame, data: DataFrame, radiusMeters: Double,
+                   queryId: String = "query_id", dataId: String = "data_id",
+                   broadcastQueries: Boolean = true): DataFrame = {
+    require(radiusMeters > 0, "radiusMeters must be positive")
+    val level = coverLevel(radiusMeters, "use a broadcast cross join with " +
+      "a geodesic predicate for continental-scale radii")
+    val dist = geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
+    coverPairs(queries.select(col(queryId), col("lon"), col("lat")),
+        data.select(col(dataId), col("lon"), col("lat")), level,
+        broadcastQueries = broadcastQueries)
+      .where(metreBand(chord2Xyz("q", "d"), dist, radiusMeters))
+      .select(col(queryId), col(dataId), dist.as("dist"))
+  }
+
   /** Chord-metric range join: all pairs with squared unit-sphere chord
     * <= `maxChord2` — the SQL-mirrorable twin of [[distanceJoin]] (the
-    * driver oracle replays [[chord2]] verbatim in DuckDB).  Same
-    * cell-cover shape; the cover radius converts the chord bound back to
-    * meters with 2% headroom so the 9-cell candidate set is complete. */
+    * driver oracle replays [[chord2]] verbatim in DuckDB; `cd` equals it
+    * bit for bit, see [[chord2Xyz]]).  Same [[coverPairs]] shape, at the
+    * [[coverLevel]] of [[chordCoverMeters]]. */
   def distanceJoinChord(queries: DataFrame, data: DataFrame, maxChord2: Double,
                         queryId: String = "query_id", dataId: String = "data_id",
                         broadcastQueries: Boolean = true): DataFrame = {
     require(maxChord2 > 0, "maxChord2 must be positive")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    // same coverage bound as distanceJoin: past level 0's safe radius the
-    // 9-cell set is not a complete cover and true pairs would leak
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"chord bound needs a $coverMeters%.0f m cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); use a broadcast cross join")
-    val level = distanceJoinLevel(coverMeters)
-    val d = tiled(data, level)
-      .select(col(dataId), col("lon").as("d_lon"), col("lat").as("d_lat"),
-        col("cell").as("cand_cell"))
-    val q0 = queries
-      .select(col(queryId), col("lon").as("q_lon"), col("lat").as("q_lat"),
-        explode(geo.cellNeighbors(
-          geo.cellId(col("lon"), col("lat"), level), 1)).as("cand_cell"))
-    val q = if (broadcastQueries) broadcast(q0) else q0
-    q.join(d, "cand_cell")
-      .withColumn("cd",
-        chord2(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat")))
+    val level = coverLevel(chordCoverMeters(maxChord2),
+      "use a broadcast cross join")
+    coverPairs(queries.select(col(queryId), col("lon"), col("lat")),
+        data.select(col(dataId), col("lon"), col("lat")), level,
+        broadcastQueries = broadcastQueries)
+      .withColumn("cd", chord2Xyz("q", "d"))
       .where(col("cd") <= lit(maxChord2))
       .select(col(queryId), col(dataId), col("cd"))
+  }
+
+  /** Candidate id pairs (li < rj) of the trajectory joins: pairs where a
+    * cell of one id lies in the other's ring-1 neighbor fan, at the
+    * [[coverLevel]] of the chord bound `maxC2` (τ).  `base` holds (tid,
+    * lon, lat).  Sound: if H ≤ τ (and Fréchet ≥ Hausdorff), EVERY point
+    * of A has a partner within τ, so one of A's cells meets B's fan — no
+    * false negatives. */
+  private def trajectoryCandidates(base: DataFrame, maxC2: Double): DataFrame = {
+    val level = coverLevel(chordCoverMeters(maxC2),
+      "compare continental-scale trajectories by a broadcast cross join")
+    val cellsOf = base
+      .select(col("tid"),
+        geo.cellId(col("lon"), col("lat"), level).as("cell"))
+      .distinct()
+    val nbrs = cellsOf
+      .select(col("tid").as("tid_b"),
+        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
+      .distinct()
+    cellsOf.join(nbrs, "cell")
+      .where(col("tid") < col("tid_b"))
+      .select(col("tid").as("li"), col("tid_b").as("rj"))
+      .distinct()
   }
 
   /** Trajectory-similarity join: all pairs of point sets whose symmetric
@@ -564,14 +615,9 @@ object GeoEngine {
     * Hausdorff in integer micrometers of sphere arc.
     *
     * Two-phase shape:
-    *   1. PREFILTER — tile distinct positions at the finest level whose
-    *      ring-1 neighborhood covers `maxDistMeters` (the
-    *      [[distanceJoinChord]] cover guarantee); candidate id pairs =
-    *      pairs sharing a (cell, ring-1 neighbor cell) key.  Sound: if
-    *      H ≤ τ, EVERY point of A has a partner within τ, so in
-    *      particular one of A's cells meets B's neighbor fan — no false
-    *      negatives, and the join never sees id pairs that are nowhere
-    *      near each other.
+    *   1. PREFILTER — [[trajectoryCandidates]]: id pairs whose cells
+    *      meet each other's ring-1 fan, so the join never sees id pairs
+    *      that are nowhere near each other.
     *   2. EXACT — per candidate pair, the bipartite point product
     *      PRUNED to chord² ≤ τ's bound: min-per-left-point then
     *      max-per-pair gives h(A→B) (and the mirror for h(B→A)); a pair
@@ -589,12 +635,6 @@ object GeoEngine {
                     lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(maxDistMeters > 0, "maxDistMeters must be positive")
     val maxC2 = maxChord2For(maxDistMeters)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxC2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"Hausdorff bound needs a $coverMeters%.0f m cover, beyond the " +
-        f"cell-cover guarantee (${ringSafeRadius(0, 1)}%.0f m)")
-    val level = distanceJoinLevel(coverMeters)
     val base = pts
       .where(col(idCol).isNotNull && col(lonCol).isNotNull &&
         col(latCol).isNotNull)
@@ -602,18 +642,7 @@ object GeoEngine {
         col(latCol).as("lat"))
       .distinct()
     val sizes = base.groupBy("tid").agg(count(lit(1)).as("np"))
-    val cellsOf = base
-      .select(col("tid"),
-        geo.cellId(col("lon"), col("lat"), level).as("cell"))
-      .distinct()
-    val nbrs = cellsOf
-      .select(col("tid").as("tid_b"),
-        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
-      .distinct()
-    val cand = cellsOf.join(nbrs, "cell")
-      .where(col("tid") < col("tid_b"))
-      .select(col("tid").as("li"), col("tid_b").as("rj"))
-      .distinct()
+    val cand = trajectoryCandidates(base, maxC2)
     val aPts = base.select(col("tid").as("li"),
       col("lon").as("a_lon"), col("lat").as("a_lat"))
     val bPts = base.select(col("tid").as("rj"),
@@ -651,15 +680,14 @@ object GeoEngine {
     * and the exact discrete Fréchet in integer micrometers of sphere
     * arc.
     *
-    * Shape: candidates come from the [[hausdorffJoin]] cell prefilter
-    * unchanged — Fréchet ≥ Hausdorff, so the cover argument carries
-    * over (F ≤ τ ⇒ every point of either side has a partner within τ).
-    * Each candidate pair then runs the classic O(|A|·|B|) dynamic
-    * program (Eiter & Mannila 1994) with a rolling row, over the two
-    * sequences collected per id in (time, x, y, z) order — a justified
-    * imperative step (the DP's min/max recurrence is inherently
-    * sequential, the [[stayPoints]] stance) on the PAIR frame, never the
-    * corpus.  The DP runs on squared chords (monotone in arc, so
+    * Shape: candidates come from [[trajectoryCandidates]], as in
+    * [[hausdorffJoin]] (Fréchet ≥ Hausdorff, so the cover argument
+    * carries over).  Each candidate pair then runs the classic
+    * O(|A|·|B|) dynamic program (Eiter & Mannila 1994) with a rolling
+    * row, over the two sequences collected per id in (time, x, y, z)
+    * order — a justified imperative step (the DP's min/max recurrence
+    * is inherently sequential, the [[stayPoints]] stance) on the PAIR
+    * frame, never the corpus.  The DP runs on squared chords (monotone in arc, so
     * max/min commute with the metric transform) and converts once at
     * the end; early rejection: if some row's running minimum exceeds
     * the bound the pair can never recover (every later path passes
@@ -676,12 +704,6 @@ object GeoEngine {
     import org.apache.spark.sql.types._
     require(maxDistMeters > 0, "maxDistMeters must be positive")
     val maxC2 = maxChord2For(maxDistMeters)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxC2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"Frechet bound needs a $coverMeters%.0f m cover, beyond the " +
-        f"cell-cover guarantee (${ringSafeRadius(0, 1)}%.0f m)")
-    val level = distanceJoinLevel(coverMeters)
     val base = pts
       .where(col(idCol).isNotNull && col(timeCol).isNotNull &&
         col(lonCol).isNotNull && col(latCol).isNotNull)
@@ -696,19 +718,7 @@ object GeoEngine {
           sin(radians(col("lat"))).as("z")).as("p"))
       .groupBy("tid")
       .agg(array_sort(collect_list(col("p"))).as("seq"))
-    val cellsOf = base
-      .select(col("tid"),
-        geo.cellId(col("lon"), col("lat"), level).as("cell"))
-      .distinct()
-    val nbrs = cellsOf
-      .select(col("tid").as("tid_b"),
-        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
-      .distinct()
-    val cand = cellsOf.join(nbrs, "cell")
-      .where(col("tid") < col("tid_b"))
-      .select(col("tid").as("li"), col("tid_b").as("rj"))
-      .distinct()
-    val paired = cand
+    val paired = trajectoryCandidates(base, maxC2)
       .join(seqs.select(col("tid").as("li"), col("seq").as("sa")), "li")
       .join(seqs.select(col("tid").as("rj"), col("seq").as("sb")), "rj")
     val outSchema = StructType(Seq(
@@ -775,20 +785,24 @@ object GeoEngine {
   }
 
   /** Candidate pairs for the spatio-temporal co-location join: one table
-    * of position fixes self-joined on (time bucket, cell) — each row
-    * keeps its HOME bucket + home cell on the A side and fans out to its
-    * 3 buckets x <=9 neighbor cells on the B side, so a true pair
-    * (|dt| <= tau, chord <= bound) matches on EXACTLY one (bucket, cell)
-    * key: A's home bucket appears once among B's three bucket values and
-    * A's home cell once in B's deduped neighbor set.  The canonical
-    * `a_id < b_id` filter then keeps each unordered pair exactly once.
-    * ONE shuffle of each side on the composite key; only ids, entity
-    * keys, epoch micros and unit-sphere (x,y,z) travel — the 27x fan-out
-    * is on a 6-column frame, never the payload. */
+    * of position fixes self-joined by [[coverPairs]] on (time bucket,
+    * cell) at the [[coverLevel]] of `coverMeters` — each row keeps its
+    * HOME bucket + home cell on the A side (the data side, `d_`
+    * geometry) and fans out to its 3 buckets x <=9 neighbor cells on the
+    * B side (the probe side, `q_` geometry), so a true pair (|dt| <= tau,
+    * within the radius) matches on EXACTLY one (bucket, cell) key: A's
+    * home bucket appears once among B's three bucket values and A's home
+    * cell once in B's deduped neighbor set.  The canonical `a_id < b_id`
+    * filter then keeps each unordered pair exactly once.  ONE shuffle of
+    * each side on the composite key; only ids, entity keys, epoch micros
+    * and unit-sphere (x,y,z) travel — the 27x fan-out is on a narrow
+    * frame, never the payload. */
   private def colocCandidates(pts: DataFrame, idCol: String, entityCol: String,
-                              level: Int, tauUs: Long, timeCol: String,
+                              coverMeters: Double, tauUs: Long, timeCol: String,
                               lonCol: String, latCol: String,
                               excludeSameEntity: Boolean): DataFrame = {
+    val level = coverLevel(coverMeters, "use a time-bucketed cross join " +
+      "for continental-scale co-location radii")
     val base = pts
       .where(col(idCol).isNotNull && col(entityCol).isNotNull &&
         col(timeCol).isNotNull &&
@@ -801,25 +815,14 @@ object GeoEngine {
     // true pair past the +-1 bucket fan.  Truncation's double-width
     // bucket 0 still keeps any pair within tau inside adjacent buckets
     // (every bucket is >= tau wide).
-    val a = tiled(base, level)
-      .select(col(idCol).as("a_id") +: col(entityCol).as("a_ent") +:
-        col("t_us").as("a_us") +:
-        expr(s"t_us DIV ${tauUs}L").as("bucket") +:
-        col("cell").as("cand_cell") +: xyzCols("lon", "lat", "a"): _*)
-    val b0 = base
-      .select(col(idCol).as("b_id") +: col(entityCol).as("b_ent") +:
-        col("t_us").as("b_us") +:
-        expr(s"t_us DIV ${tauUs}L").as("b_bucket") +:
-        explode(geo.cellNeighbors(
-          geo.cellId(col("lon"), col("lat"), level), 1)).as("cand_cell") +:
-        xyzCols("lon", "lat", "b"): _*)
-    val b = b0
-      .select(col("b_id"), col("b_ent"), col("b_us"),
-        explode(array(col("b_bucket") - 1, col("b_bucket"),
-          col("b_bucket") + 1)).as("bucket"),
-        col("cand_cell"),
-        col("b_lon"), col("b_lat"), col("b_x"), col("b_y"), col("b_z"))
-    val joined = a.join(b, Seq("bucket", "cand_cell"))
+    val bucket = expr(s"t_us DIV ${tauUs}L")
+    val home = base.select(col(idCol).as("a_id"), col(entityCol).as("a_ent"),
+      col("t_us").as("a_us"), bucket.as("bucket"), col("lon"), col("lat"))
+    val fan = base.select(col(idCol).as("b_id"), col(entityCol).as("b_ent"),
+      col("t_us").as("b_us"),
+      explode(array(bucket - 1, bucket, bucket + 1)).as("bucket"),
+      col("lon"), col("lat"))
+    val joined = coverPairs(fan, home, level, keys = Seq("bucket"))
       .where(col("a_id") < col("b_id") &&
         abs(col("a_us") - col("b_us")) <= lit(tauUs))
     if (excludeSameEntity) joined.where(col("a_ent") =!= col("b_ent"))
@@ -846,26 +849,17 @@ object GeoEngine {
     require(maxChord2 > 0, "maxChord2 must be positive")
     require(tauSeconds > 0, "tauSeconds must be positive")
     require(idCol != entityCol, "idCol and entityCol must differ")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"chord bound needs a $coverMeters%.0f m cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); use a time-bucketed " +
-        "cross join for continental-scale co-location radii")
-    val level = distanceJoinLevel(coverMeters)
-    colocCandidates(pts, idCol, entityCol, level, tauSeconds * 1000000L,
-        timeCol, lonCol, latCol, excludeSameEntity)
-      .withColumn("cd", chord2Xyz("a", "b"))
+    colocCandidates(pts, idCol, entityCol, chordCoverMeters(maxChord2),
+        tauSeconds * 1000000L, timeCol, lonCol, latCol, excludeSameEntity)
+      .withColumn("cd", chord2Xyz("d", "q"))
       .where(col("cd") <= lit(maxChord2))
       .select(col("a_id"), col("b_id"), col("a_ent"), col("b_ent"),
         (col("b_us") - col("a_us")).as("dt_us"), col("cd"))
   }
 
   /** [[colocationJoinChord]] with the radius in exact ellipsoidal meters:
-    * the same candidate shape, then [[distanceJoin]]'s three-way band —
-    * accept below the rigorous inner chord cap, reject above the outer,
-    * and run the Karney solve only in the thin annulus between.  Output
-    * `dist` is the geodesic in meters. */
+    * the same candidate shape, refined by [[distanceJoin]]'s three-way
+    * [[metreBand]].  Output `dist` is the geodesic in meters. */
   def colocationJoin(pts: DataFrame, idCol: String, entityCol: String,
                      radiusMeters: Double, tauSeconds: Long,
                      timeCol: String = "ts",
@@ -873,24 +867,11 @@ object GeoEngine {
                      excludeSameEntity: Boolean = true): DataFrame = {
     require(radiusMeters > 0, "radiusMeters must be positive")
     require(tauSeconds > 0, "tauSeconds must be positive")
-    require(radiusMeters <= ringSafeRadius(0, 1),
-      f"radiusMeters=$radiusMeters%.0f exceeds the cell-cover guarantee " +
-        f"(${ringSafeRadius(0, 1)}%.0f m); use a time-bucketed cross join " +
-        "for continental-scale co-location radii")
-    val level = distanceJoinLevel(radiusMeters)
-    def cap(divisorMeters: Double, band: Double): Double = {
-      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
-      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
-    }
-    val rejectCap = cap(6.30e6, 1.02)
-    val acceptCap = cap(6.45e6, 1.0)
-    val c2 = chord2Xyz("a", "b")
-    val dist = geo.geodDistance(col("a_lon"), col("a_lat"),
-      col("b_lon"), col("b_lat"))
-    colocCandidates(pts, idCol, entityCol, level, tauSeconds * 1000000L,
-        timeCol, lonCol, latCol, excludeSameEntity)
-      .where(c2 <= lit(acceptCap) ||
-        (c2 <= lit(rejectCap) && dist <= lit(radiusMeters)))
+    val dist = geo.geodDistance(col("d_lon"), col("d_lat"),
+      col("q_lon"), col("q_lat"))
+    colocCandidates(pts, idCol, entityCol, radiusMeters,
+        tauSeconds * 1000000L, timeCol, lonCol, latCol, excludeSameEntity)
+      .where(metreBand(chord2Xyz("d", "q"), dist, radiusMeters))
       .select(col("a_id"), col("b_id"), col("a_ent"), col("b_ent"),
         (col("b_us") - col("a_us")).as("dt_us"), dist.as("dist"))
   }
@@ -912,11 +893,9 @@ object GeoEngine {
     * partitionings and cluster sizes, and replayable in plain SQL.
     *
     * Shape (designed for 10^9+ points): the eps-neighbor pair list is a
-    * cell-cover self-join — the data tiled once map-side at the finest
-    * level whose ring-1 block covers the eps disc, the probe side
-    * exploded into its <=9-cell neighborhood — ONE shuffle on the cell
-    * key, chord^2 filter in codegen, ids + unit-sphere (x,y,z) only (no
-    * payload travels).  Neighbor counts and border labels are map-side
+    * [[coverPairs]] self-join — ONE shuffle on the cell key, chord^2
+    * filter in codegen, ids + unit-sphere (x,y,z) only (no payload
+    * travels).  Neighbor counts and border labels are map-side
     * partial aggregates of that pair list; the core-core edge list
     * (ids only) feeds [[graft.data.Dedup.connectedComponents]]'s
     * O(diameter)-round min-label propagation.  The pair list is
@@ -934,29 +913,18 @@ object GeoEngine {
     // pair-list shape cannot see zero-neighbor points); the original
     // paper's useful range starts at 2
     require(minPts >= 2, "minPts must be >= 2")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"eps needs a $coverMeters%.0f m cell cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); DBSCAN at continental " +
-        "eps degenerates to one cluster — use a coarser analysis instead")
-    val level = distanceJoinLevel(coverMeters)
+    val level = coverLevel(chordCoverMeters(maxChord2), "DBSCAN at " +
+      "continental eps degenerates to one cluster — use a coarser analysis instead")
     val base = pts
       .where(col(idCol).isNotNull && col(lonCol).isNotNull &&
         col(latCol).isNotNull)
       .select(col(idCol), col(lonCol).as("lon"), col(latCol).as("lat"))
-    // pair list: b's home cell appears exactly once in a's (deduped)
-    // neighborhood, so each ordered pair (a,b) is emitted at most once
-    val d = tiled(base, level)
-      .select(col(idCol).as("b_id") +: col("cell").as("cand_cell") +:
-        xyzCols("lon", "lat", "b"): _*)
-    val a = base.select(col(idCol).as("a_id") +:
-      explode(geo.cellNeighbors(
-        geo.cellId(col("lon"), col("lat"), level), 1)).as("cand_cell") +:
-      xyzCols("lon", "lat", "a"): _*)
-    val pairs = a.join(d, "cand_cell")
+    // pair list: each ordered pair (a,b) is emitted at most once
+    val pairs = coverPairs(
+        base.select(col(idCol).as("a_id"), col("lon"), col("lat")),
+        base.select(col(idCol).as("b_id"), col("lon"), col("lat")), level)
       .where(col("a_id") =!= col("b_id") &&
-        chord2Xyz("a", "b") <= lit(maxChord2))
+        chord2Xyz("q", "d") <= lit(maxChord2))
       .select(col("a_id"), col("b_id"))
       .localCheckpoint(false)
     val cores = pairs.groupBy("a_id")

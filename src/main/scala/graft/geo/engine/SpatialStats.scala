@@ -429,8 +429,8 @@ object SpatialStats {
     * counts, envelope and p-value); per-sim pair counts are exact longs.
     *
     * Scale shape: observed + all sims ride ONE (sim, cell)-keyed
-    * cell-cover self-join (the [[ripleysK]] machinery with the sim id
-    * in the key, so sims never cross-pair) and one groupBy(sim) of
+    * [[GeoEngine.coverPairs]] self-join (the [[ripleysK]] machinery with
+    * the sim id in the key, so sims never cross-pair) and one groupBy(sim) of
     * conditional sums; the envelope fold runs on the nSims-row frame.
     * One driver count() fixes n before generation (the Ann-centroid
     * stance). */
@@ -444,6 +444,9 @@ object SpatialStats {
       radiiMeters, "radii must be strictly ascending")
     require(areaM2 > 0, "areaM2 must be positive")
     require(nSims >= 1, "nSims must be positive")
+    val c2s = radiiMeters.map(GeoEngine.maxChord2For)
+    val level = GeoEngine.coverLevel(GeoEngine.chordCoverMeters(c2s.last),
+      "keep the largest radius within it")
     val base = pts
       .where(col(idCol).isNotNull && col(lonCol).isNotNull &&
         col(latCol).isNotNull)
@@ -476,23 +479,12 @@ object SpatialStats {
       degrees(asin(s2.cast("double") / lcgM.toDouble * 2.0 - 1.0)).as("lat"))
     val all = base.select(lit(0L).as("sim"), col("pid"), col("lon"),
       col("lat")).unionByName(sims)
-    val c2s = radiiMeters.map(GeoEngine.maxChord2For)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(c2s.last) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= GeoEngine.ringSafeRadius(0, 1),
-      "largest radius exceeds the cell-cover guarantee")
-    val level = GeoEngine.distanceJoinLevel(coverMeters)
-    val d = all.select(col("sim"), col("pid").as("j"),
-      col("lon").as("d_lon"), col("lat").as("d_lat"),
-      geo.cellId(col("lon"), col("lat"), level).as("cell"))
-    val q = all.select(col("sim"), col("pid").as("i"),
-      col("lon").as("q_lon"), col("lat").as("q_lat"),
-      explode(geo.cellNeighbors(
-        geo.cellId(col("lon"), col("lat"), level), 1)).as("cell"))
-    val pairs = q.join(d, Seq("sim", "cell"))
+    val pairs = GeoEngine.coverPairs(
+        all.select(col("sim"), col("pid").as("i"), col("lon"), col("lat")),
+        all.select(col("sim"), col("pid").as("j"), col("lon"), col("lat")),
+        level, keys = Seq("sim"))
       .where(col("i") =!= col("j"))
-      .withColumn("cd", GeoEngine.chord2(col("q_lon"), col("q_lat"),
-        col("d_lon"), col("d_lat")))
+      .withColumn("cd", GeoEngine.chord2Xyz("q", "d"))
       .where(col("cd") <= c2s.last)
     val perSim = pairs.groupBy("sim").agg(
       sum(when(col("cd") <= c2s.head, 1L).otherwise(0L)).as("c0"),

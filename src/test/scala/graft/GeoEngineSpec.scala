@@ -351,20 +351,53 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val queries = docs.limit(20)
       .select(col("doc_id").as("query_id"), col("lon"), col("lat"))
     val maxChord2 = 0.002
-    val got = GeoEngine.distanceJoinChord(queries, data, maxChord2)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    // (query, data, cd) triples: the join's per-row-xyz cd must equal the
+    // SQL-mirror chord2 bit for bit, not just select the same pairs
+    def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    val got = triples(GeoEngine.distanceJoinChord(queries, data, maxChord2))
     val d = data.select(col("data_id"),
       col("lon").as("d_lon"), col("lat").as("d_lat"))
-    val brute = queries
+    val brute = triples(queries
       .select(col("query_id"), col("lon").as("q_lon"), col("lat").as("q_lat"))
       .crossJoin(d)
-      .where(GeoEngine.chord2(col("q_lon"), col("q_lat"),
-        col("d_lon"), col("d_lat")) <= maxChord2)
-      .select("query_id", "data_id")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      .withColumn("cd", GeoEngine.chord2(col("q_lon"), col("q_lat"),
+        col("d_lon"), col("d_lat")))
+      .where(col("cd") <= maxChord2)
+      .select("query_id", "data_id", "cd"))
     assert(brute.nonEmpty)
     assert(got == brute,
       s"missing=${(brute -- got).size} extra=${(got -- brute).size}")
+  }
+
+  test("every cell-cover radius join refuses a radius past the cover guarantee") {
+    import graft.geo.engine.SpatialStats
+    val sp = spark; import sp.implicits._
+    val pts = Seq((1L, "e1", 0L, 10.0, 45.0), (2L, "e2", 10L, 10.1, 45.1))
+      .toDF("pt_id", "ent", "t_s", "lon", "lat")
+      .select(col("pt_id"), col("pt_id").as("traj_id"), col("ent"),
+        col("t_s").cast("timestamp").as("ts"), col("lon"), col("lat"))
+    val q = pts.select(col("pt_id").as("query_id"), col("lon"), col("lat"))
+    val d = pts.select(col("pt_id").as("data_id"), col("lon"), col("lat"))
+    val far = 2.5e6
+    val c2 = GeoEngine.maxChord2For(far)
+    assert(far > GeoEngine.ringSafeRadius(0, 1))
+    val joins: Seq[(String, () => Any)] = Seq(
+      "distanceJoin" -> (() => GeoEngine.distanceJoin(q, d, far)),
+      "distanceJoinChord" -> (() => GeoEngine.distanceJoinChord(q, d, c2)),
+      "colocationJoin" ->
+        (() => GeoEngine.colocationJoin(pts, "pt_id", "ent", far, 60L)),
+      "colocationJoinChord" ->
+        (() => GeoEngine.colocationJoinChord(pts, "pt_id", "ent", c2, 60L)),
+      "dbscanChord" -> (() => GeoEngine.dbscanChord(pts, "pt_id", c2, 2)),
+      "hausdorffJoin" -> (() => GeoEngine.hausdorffJoin(pts, far)),
+      "frechetJoin" -> (() => GeoEngine.frechetJoin(pts, far)),
+      "lEnvelope" -> (() => SpatialStats.lEnvelope(pts, Seq(1e5, far), 1e12)),
+      "ripleysK" -> (() => SpatialStats.ripleysK(pts, Seq(1e5, far), 1e12)))
+    for ((name, run) <- joins) {
+      val e = withClue(s"$name: ") { intercept[IllegalArgumentException](run()) }
+      assert(e.getMessage.contains("cell-cover guarantee"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("hausdorffJoin equals the brute-force set distance") {

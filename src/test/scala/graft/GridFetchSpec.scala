@@ -92,6 +92,11 @@ class GridFetchSpec extends AnyFunSuite {
     }
   }
 
+  test("UrlFetcher treats a name that is not a valid URI as a miss") {
+    // the space fails URI parsing before any connection is attempted
+    assert(Grids.UrlFetcher("http://localhost").fetch("bad name.gsb") == None)
+  }
+
   test("path-escaping names are refused, local files always win") {
     Grids.registerFetcher(new Grids.GridFetcher {
       def fetch(n: String): Option[Array[Byte]] = Some(Array[Byte](1, 2, 3))
