@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-off scale measurements for ops outside the driver's headline
-  * Bench (whose job set is held stable for round-over-round
-  * comparison): the corpus-assembly trio (paragraph dedup, stratified
-  * sampling, sequence packing) on a synthetic N-doc corpus, plus the
-  * round-3 additions — semantic dedup over N/10 synthetic 64-dim
-  * embeddings and the multi-level tile pyramid over N points.  Results
-  * are recorded in BENCH.md.
+/** `Bench corpus [nDocs]` (default 10M): one-off scale measurements for
+  * ops outside the driver's headline Bench (whose job set is held stable
+  * for round-over-round comparison): the corpus-assembly trio (paragraph
+  * dedup, stratified sampling, sequence packing) on a synthetic N-doc
+  * corpus, plus the round-3 additions — semantic dedup over N/10
+  * synthetic 64-dim embeddings and the multi-level tile pyramid over N
+  * points.  Results are recorded in BENCH.md.
   *
   * Corpus shape: every doc has a boilerplate header paragraph shared by
   * n/1000 docs (the C4 boilerplate situation), a unique body paragraph
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * strips ~1/3 of paragraphs, sampling strata are 5 synthetic langs,
   * and packing sees realistic token-count variance.
   */
-object CorpusBench {
-  def synth(spark: SparkSession, n: Long): DataFrame =
+private[graft] object CorpusBench {
+  private def synth(spark: SparkSession, n: Long): DataFrame =
     spark.range(n).select(col("id").as("doc_id"),
       concat_ws("\n",
         concat(lit("shared boilerplate header variant "), pmod(col("id"), lit(1000))),
@@ -27,24 +27,13 @@ object CorpusBench {
         concat(lit("trailer of document "), col("id"))).as("text"),
       concat(lit("l"), pmod(col("id"), lit(5))).as("lang"))
 
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(args: Seq[String]): Unit = {
+    val n = args.headOption.fold(10000000L)(_.toLong)
+    val spark = Bench.session(Bench.envCpus, Bench.envCpus, Bench.DefaultSplitBytes)
     val docs = synth(spark, n)
 
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"""{"job":"$label","sec":$s%.2f,"rows":$rows,"rows_per_s":${(rows / s).toLong}}""")
-    }
+    def time(label: String)(f: => Long): Unit =
+      Bench.printJob(label, (rows, s) => s""""rows_per_s":${(rows / s).toLong}""")(f)
 
     time("paragraph_dedup")(
       graft.data.Corpus.paragraphDedup(docs).count())
@@ -129,7 +118,7 @@ object CorpusBench {
       val w = graft.data.Corpus.dsirWeights(
         docs, docs.where(col("lang") === "l0"), n = 2, buckets = 4096)
       docs.select(graft.data.Corpus.dsirScore(w, 2, 4096)(col("text")).as("s"))
-        .agg(sum("s")).head
+        .agg(sum("s")).head()
       n
     }
 
@@ -140,7 +129,7 @@ object CorpusBench {
       val m = graft.data.Corpus.lmTrain(
         docs.where(col("lang") === "l0"), buckets = 65536)
       docs.select(graft.data.Corpus.lmLogProbSum(m)(col("text")).as("lp"))
-        .agg(sum("lp")).head
+        .agg(sum("lp")).head()
       n
     }
 
@@ -163,17 +152,15 @@ object CorpusBench {
     // then an identical ~10%-selectivity cell-range scan on each — the
     // clustered write's one range exchange buys footer min/max pruning
     // for every later spatial predicate
-    val layoutPts = spark.range(n).select(col("id"),
-      (pmod(col("id") * lit(0.6180339887), lit(360.0)) - lit(180.0)).as("lon"),
-      (pmod(col("id") * lit(0.7548776662), lit(170.0)) - lit(85.0)).as("lat"))
+    val pts = Bench.scatter(spark, n)
     val tmpDir = java.nio.file.Files.createTempDirectory("graft-layout").toString
     time("layout_write_plain") {
-      graft.geo.engine.GeoEngine.tiled(layoutPts, 8)
+      graft.geo.engine.GeoEngine.tiled(pts, 8)
         .write.mode("overwrite").parquet(s"$tmpDir/plain"); n
     }
     time("layout_write_clustered") {
       graft.geo.engine.GeoEngine.writeCellClustered(
-        layoutPts, 8, s"$tmpDir/clustered", numFiles = 64); n
+        pts, 8, s"$tmpDir/clustered", numFiles = 64); n
     }
     val qs = spark.read.parquet(s"$tmpDir/clustered")
       .stat.approxQuantile("cell", Array(0.45, 0.55), 0.001)
@@ -201,9 +188,6 @@ object CorpusBench {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpDir))
 
     // tile pyramid at N points, 9 zoom levels in one scan+shuffle
-    val pts = spark.range(n).select(
-      (pmod(col("id") * lit(0.6180339887), lit(360.0)) - lit(180.0)).as("lon"),
-      (pmod(col("id") * lit(0.7548776662), lit(170.0)) - lit(85.0)).as("lat"))
     time("tile_pyramid_l4_12")(
       graft.geo.engine.GeoEngine.tilePyramid(pts, 4, 12).count())
 

@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Bench.{RepDiag, checksum, timeRep}
 import graft.geo.engine.GeoEngine
 import graft.geo.expr.geo
 
-/** Two-cluster-size scaling evidence (BASELINE.md protocol): run the same
-  * jobs on the same input at local[N] and local[4N]:
+/** `Bench scaling [nDocs] [N] [dedup]`: two-cluster-size scaling evidence
+  * (BASELINE.md protocol) — the same jobs on the same input at local[N]
+  * and local[4N]:
   *
   *  - `kernel`: 120M UTM (Poder-Engsager) transforms + cell encodes from an
   *    in-memory generator — the numeric core, measuring pure compute
@@ -19,35 +21,28 @@ import graft.geo.expr.geo
   *    a real N-node cluster adds bandwidth with nodes).
   *
   * Asserts bit-for-bit equality of tile assignments and join rows across
-  * the two parallelism levels and appends the table to BASELINE.md.
+  * the two parallelism levels and appends the table to ./BASELINE.md.
+  * A third argument `dedup` runs the data-pipeline pair instead.
   *
-  * Usage: sbt "runMain graft.ScalingBench [nDocs] [N]"  (default 8M, N=2;
-  * N=2 vs 4N=8 stays within the host's 16 physical cores — 8 vs 32 would
-  * measure hyperthread contention, not scaling).
+  * Defaults: 8M docs, N=2 (N=2 vs 4N=8 stays within the host's 16 physical
+  * cores — 8 vs 32 would measure hyperthread contention, not scaling).
   */
-object ScalingBench {
+private[graft] object ScalingBench {
 
-  final case class RunStats(cpus: Int, kernelSec: Double, kernelRows: Long,
-                            pipeSec: Double, tileAssignments: Long,
+  final case class RunStats(kernel: RepDiag, kernelRows: Long,
+                            pipe: RepDiag, tileAssignments: Long,
                             pipRows: Long, tileChecksum: String,
                             pipChecksum: String,
-                            narrowSec: Double, narrowTileCk: String,
+                            narrow: RepDiag, narrowTileCk: String,
                             narrowPipCk: String,
-                            distSec: Double, distRows: Long, distCk: String)
+                            dist: RepDiag, distRows: Long, distCk: String)
 
   private val KernelRows = 120000000L
 
   def runAt(cpus: Int, corpusPath: String, narrowPath: String,
             distQueryMod: Long): RunStats = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split the skewed hotspot partition files into many input tasks
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // split the skewed hotspot partition files into many input tasks
+    val spark = Bench.session(cpus, cpus, 8L << 20)
     try {
       // --- kernel job (in-memory source, pure numeric) ---------------------
       val utm = graft.geo.kernels.UtmKernel(31)
@@ -60,32 +55,18 @@ object ScalingBench {
               .getField("x").as("x"),
             geo.cellId(col("lon"), col("lat"), 14).as("cell"))
           .where(col("x").isNotNull)
-          .agg(count(lit(1))).head.getLong(0)
+          .agg(count(lit(1))).head().getLong(0)
       }
       kernelJob(1000000) // warm codegen + JIT
-      val k0 = System.nanoTime()
-      val kernelRows = kernelJob(KernelRows)
-      val kernelSec = (System.nanoTime() - k0) / 1e9
+      val (kernel, kernelRows) = timeRep(kernelJob(KernelRows))
 
       // --- corpus pipeline job --------------------------------------------
-      def agg1(df: DataFrame, cols: Seq[String]): (Long, String) = {
-        val h = xxhash64(cols.map(col): _*)
-        val r = df.agg(count(lit(1)), sum(shiftrightunsigned(h, 33)),
-          sum(h.bitwiseAND(lit(0x7fffffffL)))).head
-        (r.getLong(0),
-          if (r.isNullAt(1)) "0:0" else s"${r.getLong(1)}:${r.getLong(2)}")
-      }
-      val docs = spark.read.parquet(corpusPath)
-      val geoDocs = GeoEngine.withGeoTag(docs)
-      val t0 = System.nanoTime()
-      val (tileN, tileCk) = agg1(
-        GeoEngine.tiled(geoDocs, 12).select("doc_id", "cell"),
-        Seq("doc_id", "cell"))
-      val (pipN, pipCk) = agg1(
-        GeoEngine.pipJoin(spark, geoDocs, Bench.benchPolys)
-          .select("doc_id", "poly_id"),
-        Seq("doc_id", "poly_id"))
-      val pipeSec = (System.nanoTime() - t0) / 1e9
+      def tileAndPip(df: DataFrame) = timeRep((
+        checksum(GeoEngine.tiled(df, 12), Seq("doc_id", "cell")),
+        checksum(GeoEngine.pipJoin(spark, df, Bench.benchPolys),
+          Seq("doc_id", "poly_id"))))
+      val (pipe, ((tileN, tileCk), (pipN, pipCk))) =
+        tileAndPip(GeoEngine.withGeoTag(spark.read.parquet(corpusPath)))
 
       // --- narrow-layout pipeline (the production geo table: extract
       // once, then all joins run over (doc_id, lon, lat) columns — the
@@ -101,15 +82,7 @@ object ScalingBench {
         spark.read.parquet(narrowPath)
           .withColumn("doc_id", concat(col("doc_id"), lit("#" + i)))
       }.reduce(_ unionByName _)
-      val n0 = System.nanoTime()
-      val (nTileN, nTileCk) = agg1(
-        GeoEngine.tiled(narrow, 12).select("doc_id", "cell"),
-        Seq("doc_id", "cell"))
-      val (nPipN, nPipCk) = agg1(
-        GeoEngine.pipJoin(spark, narrow, Bench.benchPolys)
-          .select("doc_id", "poly_id"),
-        Seq("doc_id", "poly_id"))
-      val narrowSec = (System.nanoTime() - n0) / 1e9
+      val (narrowRep, ((nTileN, nTileCk), (nPipN, nPipCk))) = tileAndPip(narrow)
       require(nTileN == 4 * tileN && nPipN == 4 * pipN,
         "narrow-layout results differ from the wide scan!")
 
@@ -125,26 +98,22 @@ object ScalingBench {
         .select(col("doc_id").as("query_id"), col("lon"), col("lat"))
       val dData = geoNarrow
         .select(col("doc_id").as("data_id"), col("lon"), col("lat"))
-      val d0 = System.nanoTime()
-      val (distN, distCk) = agg1(
-        GeoEngine.distanceJoin(dQueries, dData, radiusMeters = 25000.0)
-          .select("query_id", "data_id"),
-        Seq("query_id", "data_id"))
-      val distSec = (System.nanoTime() - d0) / 1e9
+      val (dist, (distN, distCk)) = timeRep(checksum(
+        GeoEngine.distanceJoin(dQueries, dData, radiusMeters = 25000.0),
+        Seq("query_id", "data_id")))
 
-      RunStats(cpus, kernelSec, kernelRows, pipeSec, tileN, pipN, tileCk, pipCk,
-        narrowSec, nTileCk, nPipCk, distSec, distN, distCk)
+      RunStats(kernel, kernelRows, pipe, tileN, pipN, tileCk, pipCk,
+        narrowRep, nTileCk, nPipCk, dist, distN, distCk)
     } finally spark.stop()
   }
 
   // ------------------------------------------------- dedup scaling mode
 
-  final case class DedupStats(cpus: Int, dedupSec: Double, dedupPairs: Long,
-                              dedupCk: String, corpusSec: Double,
+  final case class DedupStats(dedup: RepDiag, dedupPairs: Long,
+                              dedupCk: String, corpus: RepDiag,
                               corpusDocs: Long, corpusCk: String,
-                              stagedSec: Double = -1.0,
-                              dedupCpuSec: Double = -1.0,
-                              corpusCpuSec: Double = -1.0)
+                              stagedSec: Double,
+                              dedupCpuSec: Double, corpusCpuSec: Double)
 
   /** Whole-process CPU seconds (user+sys across all threads) — the
     * work-conservation check for the scaling pairs: if a job burns the
@@ -168,37 +137,21 @@ object ScalingBench {
     * no RNG), so the checksums must match exactly. */
   def runDedupAt(cpus: Int, textsPath: String,
                  alsoStaged: Boolean = false): DedupStats = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-dedup-$cpus")
-      // dedup shuffles are DATA-sized, not core-sized: the banded
-      // minhash exchange carries docs x bands rows (128M at 8M docs),
-      // and `partitions = cpus` makes multi-GB sort partitions that
-      // spill — both runs go disk-bound and the scaling ratio measures
-      // the disk, not the cores.  Size for ~tens of MB per partition and
-      // let AQE coalesce the small stages down (AQE can only merge,
-      // never split).  Same value at BOTH parallelism levels.
-      .config("spark.sql.shuffle.partitions", 96)
-      .config("spark.sql.files.maxPartitionBytes", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dedup shuffles are DATA-sized, not core-sized: the banded
+    // minhash exchange carries docs x bands rows (128M at 8M docs),
+    // and `partitions = cpus` makes multi-GB sort partitions that
+    // spill — both runs go disk-bound and the scaling ratio measures
+    // the disk, not the cores.  Size for ~tens of MB per partition and
+    // let AQE coalesce the small stages down (AQE can only merge,
+    // never split).  Same value at BOTH parallelism levels.
+    val spark = Bench.session(cpus, 96, 64L << 20)
     try {
-      def agg1(df: DataFrame, cols: Seq[String]): (Long, String) = {
-        val h = xxhash64(cols.map(col): _*)
-        val r = df.agg(count(lit(1)), sum(shiftrightunsigned(h, 33)),
-          sum(h.bitwiseAND(lit(0x7fffffffL)))).head
-        (r.getLong(0),
-          if (r.isNullAt(1)) "0:0" else s"${r.getLong(1)}:${r.getLong(2)}")
-      }
       val texts = spark.read.parquet(textsPath)
 
-      val m0 = System.nanoTime(); val mc0 = processCpuSec()
-      val (nPairs, pairCk) = agg1(
-        graft.data.Dedup.minhashLsh(texts, jaccardThreshold = 0.5)
-          .select("left_id", "right_id"),
-        Seq("left_id", "right_id"))
-      val dedupSec = (System.nanoTime() - m0) / 1e9
+      val mc0 = processCpuSec()
+      val (dedup, (nPairs, pairCk)) = timeRep(checksum(
+        graft.data.Dedup.minhashLsh(texts, jaccardThreshold = 0.5),
+        Seq("left_id", "right_id")))
       val dedupCpuSec = processCpuSec() - mc0
 
       // end-to-end pipeline over the same corpus: deterministic url from
@@ -211,18 +164,20 @@ object ScalingBench {
           lit(".example.com/p/"), col("doc_id")))
       val eval = docs.where(pmod(xxhash64(col("doc_id")), lit(4001)) === 0)
         .select(col("doc_id").as("eval_id"), col("text"))
-      val c0 = System.nanoTime(); val cc0 = processCpuSec()
+      def survivors(lineage: String): (Long, String) = {
+        val r = graft.data.CorpusPipeline.build(docs,
+          graft.data.CorpusPipeline.Config(
+            evalSet = Some(eval),
+            maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0,
+            lineage = lineage))
+        checksum(r.stages.last._2, Seq("doc_id"))
+      }
+      val cc0 = processCpuSec()
       // the DEFAULT build since round 5 — lineage = "production": cuts
       // only post-near-dup and post-gate (the r4 study's middle between
       // the staged build's per-stage barriers, 0.55 efficiency at 4→16,
       // and the lazy build's ~2.4× recompute wall)
-      val r = graft.data.CorpusPipeline.build(docs,
-        graft.data.CorpusPipeline.Config(
-          evalSet = Some(eval),
-          maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0))
-      val (nSurv, survCk) = agg1(
-        r.stages.last._2.select("doc_id"), Seq("doc_id"))
-      val corpusSec = (System.nanoTime() - c0) / 1e9
+      val (corpus, (nSurv, survCk)) = timeRep(survivors("production"))
       val corpusCpuSec = processCpuSec() - cc0
 
       // staged twin at the SMALL rung only: the wall-time yardstick the
@@ -230,55 +185,63 @@ object ScalingBench {
       val stagedSec =
         if (!alsoStaged) -1.0
         else {
-          val s0 = System.nanoTime()
-          val rs = graft.data.CorpusPipeline.build(docs,
-            graft.data.CorpusPipeline.Config(
-              evalSet = Some(eval),
-              maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0,
-              lineage = "staged"))
-          val (nS, ckS) = agg1(rs.stages.last._2.select("doc_id"), Seq("doc_id"))
+          val (staged, (nS, ckS)) = timeRep(survivors("staged"))
           require(nS == nSurv && ckS == survCk,
             "staged and production builds disagree on survivors!")
-          (System.nanoTime() - s0) / 1e9
+          staged.sec
         }
 
-      DedupStats(cpus, dedupSec, nPairs, pairCk, corpusSec, nSurv, survCk,
+      DedupStats(dedup, nPairs, pairCk, corpus, nSurv, survCk,
         stagedSec, dedupCpuSec, corpusCpuSec)
     } finally spark.stop()
   }
 
-  def dedupMain(nDocs: Long, baseN: Int, corpusPath: String): Unit = {
+  def run(args: Seq[String]): Unit = {
+    val nDocs = args.lift(0).fold(8000000L)(_.toLong)
+    val baseN = args.lift(1).fold(2)(_.toInt)
+    val dedup = args.lift(2).contains("dedup")
+    val corpusPath = Bench.corpusPath(nDocs)
+    val narrowPath = corpusPath + "_geo"
     val textsPath = corpusPath + "_texts"
-    if (!new java.io.File(s"$textsPath/_SUCCESS").exists()) {
-      val s = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.read.parquet(corpusPath)
-        .select(col("doc_id"),
-          array_join(col("spans").getField("text"), " ").as("text"))
-        .repartition(64)
-        .write.mode("overwrite").parquet(textsPath)
-      s.stop()
-    }
-    // page-cache warm only (JIT is per-JVM anyway): one full read of the
-    // texts table — a full dedup warm run at baseN would add ~25 min of
-    // wall for no measurement benefit
-    locally {
-      val s = SparkSession.builder().master("local[16]")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.read.parquet(textsPath).agg(count(col("text"))).head
-      s.stop()
-    }
+    val s = Bench.session(16, 32, Bench.DefaultSplitBytes)
+    try {
+      Bench.materialize(corpusPath)(Bench.writeCorpus(s, nDocs, _))
+      if (dedup) {
+        Bench.materialize(textsPath)(Bench.spanText(s.read.parquet(corpusPath))
+          .repartition(64).write.mode("overwrite").parquet(_))
+        // page-cache warm only (JIT is per-JVM anyway): one full read of
+        // the texts table — a full dedup warm run at baseN would add
+        // ~25 min of wall for no measurement benefit
+        s.read.parquet(textsPath).agg(count(col("text"))).head()
+      } else
+        Bench.materialize(narrowPath)(GeoEngine.withGeoTag(s.read.parquet(corpusPath))
+          .select("doc_id", "lon", "lat").repartition(64)
+          .write.mode("overwrite").parquet(_))
+    } finally s.stop()
+    if (dedup) dedupPair(nDocs, baseN, textsPath)
+    else spatialPair(nDocs, baseN, corpusPath, narrowPath)
+  }
+
+  private def record(table: String, json: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get("BASELINE.md"),
+      table.getBytes("UTF-8"), java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    println(table)
+    println(json)
+  }
+
+  private def diagPairs(jobs: (String, RepDiag, RepDiag)*): String =
+    Bench.jsonObject(jobs.map { case (k, a, b) => k -> s"[${a.json},${b.json}]" })
+
+  private def dedupPair(nDocs: Long, baseN: Int, textsPath: String): Unit = {
     val small = runDedupAt(baseN, textsPath, alsoStaged = true)
     val big = runDedupAt(baseN * 4, textsPath)
     require(small.dedupPairs == big.dedupPairs && small.dedupCk == big.dedupCk,
       "minhash dup pairs differ between parallelism levels!")
     require(small.corpusDocs == big.corpusDocs && small.corpusCk == big.corpusCk,
       "corpus-pipeline survivors differ between parallelism levels!")
-    val dedupEff = small.dedupSec / big.dedupSec / 4.0
-    val corpusEff = small.corpusSec / big.corpusSec / 4.0
+    val dedupEff = small.dedup.sec / big.dedup.sec / 4.0
+    val corpusEff = small.corpus.sec / big.corpus.sec / 4.0
     val stamp = java.time.Instant.now().toString
     val table =
       s"""
@@ -286,8 +249,8 @@ object ScalingBench {
          |
          || job | local[$baseN] wall s | local[${baseN * 4}] wall s | result rows | efficiency |
          ||---|---|---|---|---|
-         || minhash near-dup (full corpus) | ${f"${small.dedupSec}%.2f"} | ${f"${big.dedupSec}%.2f"} | ${small.dedupPairs} dup pairs | ${f"$dedupEff%.3f"} |
-         || corpus pipeline, production lineage (url+exact+near-dup+CC+gate+decontam+split) | ${f"${small.corpusSec}%.2f"} | ${f"${big.corpusSec}%.2f"} | ${small.corpusDocs} survivors | ${f"$corpusEff%.3f"} |
+         || minhash near-dup (full corpus) | ${f"${small.dedup.sec}%.2f"} | ${f"${big.dedup.sec}%.2f"} | ${small.dedupPairs} dup pairs | ${f"$dedupEff%.3f"} |
+         || corpus pipeline, production lineage (url+exact+near-dup+CC+gate+decontam+split) | ${f"${small.corpus.sec}%.2f"} | ${f"${big.corpus.sec}%.2f"} | ${small.corpusDocs} survivors | ${f"$corpusEff%.3f"} |
          |
          |Work conservation (process CPU-seconds, user+sys all threads):
          |minhash ${f"${small.dedupCpuSec}%.0f"} @${baseN} vs ${f"${big.dedupCpuSec}%.0f"} @${baseN * 4}
@@ -303,47 +266,17 @@ object ScalingBench {
          |${small.corpusCk == big.corpusCk} (order-insensitive split
          |xxhash64 sums).  **MinHash scaling efficiency = ${f"$dedupEff%.3f"};
          |corpus-pipeline efficiency = ${f"$corpusEff%.3f"}** (target >= 0.8).
-         |Production-vs-staged wall at local[$baseN]: ${f"${small.corpusSec}%.2f"} s
-         |vs ${f"${small.stagedSec}%.2f"} s = ${f"${small.corpusSec / math.max(1e-9, small.stagedSec)}%.2f"}×
+         |Production-vs-staged wall at local[$baseN]: ${f"${small.corpus.sec}%.2f"} s
+         |vs ${f"${small.stagedSec}%.2f"} s = ${f"${small.corpus.sec / math.max(1e-9, small.stagedSec)}%.2f"}×
          |(staged twin checksum-verified equal; bar <= ~1.5×).
          |""".stripMargin
-    java.nio.file.Files.write(java.nio.file.Paths.get("BASELINE.md"),
-      table.getBytes("UTF-8"), java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    println(table)
-    println(s"""{"metric":"dedup_scaling_efficiency","value":${f"$dedupEff%.4f"},"unit":"ratio","corpus_pipeline_efficiency":${f"$corpusEff%.4f"},"small_cpus":$baseN,"big_cpus":${baseN * 4},"docs":$nDocs}""")
+    val diag = diagPairs(("minhash", small.dedup, big.dedup),
+      ("corpus_pipeline", small.corpus, big.corpus))
+    record(table, s"""{"metric":"dedup_scaling_efficiency","value":${f"$dedupEff%.4f"},"unit":"ratio","corpus_pipeline_efficiency":${f"$corpusEff%.4f"},"small_cpus":$baseN,"big_cpus":${baseN * 4},"docs":$nDocs,"diag":$diag}""")
   }
 
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 0) args(0).toLong else 8000000L
-    val baseN = if (args.length > 1) args(1).toInt else 2
-    val corpusPath = s"/tmp/graft_bench_corpus_$nDocs"
-
-    if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
-      val s = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Bench.materializeCorpus(s, nDocs, corpusPath)
-      s.stop()
-    }
-    // mode arg 3: "dedup" runs the data-pipeline scaling pair only
-    if (args.length > 2 && args(2) == "dedup") {
-      dedupMain(nDocs, baseN, corpusPath); return
-    }
-    val narrowPath = corpusPath + "_geo"
-    if (!new java.io.File(s"$narrowPath/_SUCCESS").exists()) {
-      val s = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      GeoEngine.withGeoTag(s.read.parquet(corpusPath))
-        .select("doc_id", "lon", "lat")
-        .repartition(64)
-        .write.mode("overwrite").parquet(narrowPath)
-      s.stop()
-    }
-
+  private def spatialPair(nDocs: Long, baseN: Int, corpusPath: String,
+                          narrowPath: String): Unit = {
     // ~2,000 distance-join queries: enough parallel Karney work that the
     // job's ~2 s of fixed cost (query-side scan, broadcast build, job
     // setup) amortizes away — at ~200 queries the fixed part dominated
@@ -369,12 +302,12 @@ object ScalingBench {
     require(small.distRows == big.distRows && small.distCk == big.distCk,
       "distance-join rows differ between parallelism levels!")
 
-    val kernelEff = small.kernelSec / big.kernelSec / 4.0
-    val pipeEff = small.pipeSec / big.pipeSec / 4.0
-    val narrowEff = small.narrowSec / big.narrowSec / 4.0
-    val distEff = small.distSec / big.distSec / 4.0
+    val kernelEff = small.kernel.sec / big.kernel.sec / 4.0
+    val pipeEff = small.pipe.sec / big.pipe.sec / 4.0
+    val narrowEff = small.narrow.sec / big.narrow.sec / 4.0
+    val distEff = small.dist.sec / big.dist.sec / 4.0
 
-    def rate(rows: Long, sec: Double): Long = (rows / sec).toLong
+    def rate(rows: Long, d: RepDiag): Long = (rows / d.sec).toLong
     val stamp = java.time.Instant.now().toString
     val table =
       s"""
@@ -382,10 +315,10 @@ object ScalingBench {
          |
          || job | local[$baseN] wall s | local[${baseN * 4}] wall s | rows | rows/s @$baseN | rows/s @${baseN * 4} | efficiency |
          ||---|---|---|---|---|---|---|
-         || kernel (UTM+cell, 120M pts) | ${f"${small.kernelSec}%.2f"} | ${f"${big.kernelSec}%.2f"} | ${small.kernelRows} | ${rate(small.kernelRows, small.kernelSec)} | ${rate(big.kernelRows, big.kernelSec)} | ${f"$kernelEff%.3f"} |
-         || pipeline (tile+PIP, wide interleaved scan) | ${f"${small.pipeSec}%.2f"} | ${f"${big.pipeSec}%.2f"} | ${small.tileAssignments + small.pipRows} | ${rate(small.tileAssignments + small.pipRows, small.pipeSec)} | ${rate(big.tileAssignments + big.pipRows, big.pipeSec)} | ${f"$pipeEff%.3f"} |
-         || pipeline (tile+PIP, narrow geo table, 4x rows) | ${f"${small.narrowSec}%.2f"} | ${f"${big.narrowSec}%.2f"} | ${4 * (small.tileAssignments + small.pipRows)} | ${rate(4 * (small.tileAssignments + small.pipRows), small.narrowSec)} | ${rate(4 * (big.tileAssignments + big.pipRows), big.narrowSec)} | ${f"$narrowEff%.3f"} |
-         || distance join (25 km, ~2,000 queries, output rows/s) | ${f"${small.distSec}%.2f"} | ${f"${big.distSec}%.2f"} | ${small.distRows} | ${rate(small.distRows, small.distSec)} | ${rate(big.distRows, big.distSec)} | ${f"$distEff%.3f"} |
+         || kernel (UTM+cell, 120M pts) | ${f"${small.kernel.sec}%.2f"} | ${f"${big.kernel.sec}%.2f"} | ${small.kernelRows} | ${rate(small.kernelRows, small.kernel)} | ${rate(big.kernelRows, big.kernel)} | ${f"$kernelEff%.3f"} |
+         || pipeline (tile+PIP, wide interleaved scan) | ${f"${small.pipe.sec}%.2f"} | ${f"${big.pipe.sec}%.2f"} | ${small.tileAssignments + small.pipRows} | ${rate(small.tileAssignments + small.pipRows, small.pipe)} | ${rate(big.tileAssignments + big.pipRows, big.pipe)} | ${f"$pipeEff%.3f"} |
+         || pipeline (tile+PIP, narrow geo table, 4x rows) | ${f"${small.narrow.sec}%.2f"} | ${f"${big.narrow.sec}%.2f"} | ${4 * (small.tileAssignments + small.pipRows)} | ${rate(4 * (small.tileAssignments + small.pipRows), small.narrow)} | ${rate(4 * (big.tileAssignments + big.pipRows), big.narrow)} | ${f"$narrowEff%.3f"} |
+         || distance join (25 km, ~2,000 queries, output rows/s) | ${f"${small.dist.sec}%.2f"} | ${f"${big.dist.sec}%.2f"} | ${small.distRows} | ${rate(small.distRows, small.dist)} | ${rate(big.distRows, big.dist)} | ${f"$distEff%.3f"} |
          |
          |Tile assignments: ${small.tileAssignments}; PIP join rows: ${small.pipRows}.
          |Bit-for-bit across parallelism levels: tile checksum equal = ${small.tileChecksum == big.tileChecksum},
@@ -403,10 +336,9 @@ object ScalingBench {
          |real multi-node cluster adds memory bandwidth with every node,
          |which local[] cannot emulate.
          |""".stripMargin
-    java.nio.file.Files.write(java.nio.file.Paths.get("BASELINE.md"),
-      table.getBytes("UTF-8"), java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    println(table)
-    println(s"""{"metric":"scaling_efficiency","value":${f"$kernelEff%.4f"},"unit":"ratio","distance_join_efficiency":${f"$distEff%.4f"},"pipeline_efficiency":${f"$pipeEff%.4f"},"narrow_pipeline_efficiency":${f"$narrowEff%.4f"},"small_cpus":$baseN,"big_cpus":${baseN * 4},"docs":$nDocs,"kernel_rows":${KernelRows}}""")
+    val diag = diagPairs(("kernel", small.kernel, big.kernel),
+      ("pipeline", small.pipe, big.pipe), ("narrow_pipeline", small.narrow, big.narrow),
+      ("distance_join", small.dist, big.dist))
+    record(table, s"""{"metric":"scaling_efficiency","value":${f"$kernelEff%.4f"},"unit":"ratio","distance_join_efficiency":${f"$distEff%.4f"},"pipeline_efficiency":${f"$pipeEff%.4f"},"narrow_pipeline_efficiency":${f"$narrowEff%.4f"},"small_cpus":$baseN,"big_cpus":${baseN * 4},"docs":$nDocs,"kernel_rows":${KernelRows},"diag":$diag}""")
   }
 }

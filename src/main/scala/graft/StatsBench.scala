@@ -1,41 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.geo.engine.SpatialStats
 
-/** One-off scale measurements for the spatial-statistics suite (Gi*,
-  * local Moran, Mann–Kendall, Ripley's K) on a synthetic N-point
-  * golden-ratio scatter — the ops whose design claim is "only the first
-  * aggregation touches the corpus; every later stage runs on the tiny
-  * cell frame".  Results are recorded in BENCH.md alongside the
-  * CorpusBench rows (the driver's headline Bench job set is held stable
-  * for round-over-round comparison).
+/** `Bench stats [nPoints]` (default 10M): one-off scale measurements for
+  * the spatial-statistics suite (Gi*, local Moran, Mann–Kendall, Ripley's
+  * K) on a synthetic N-point golden-ratio scatter — the ops whose design
+  * claim is "only the first aggregation touches the corpus; every later
+  * stage runs on the tiny cell frame".  Results are recorded in BENCH.md
+  * alongside the `Bench corpus` rows (the driver's headline Bench job set
+  * is held stable for round-over-round comparison).
   */
-object StatsBench {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+private[graft] object StatsBench {
+  def run(args: Seq[String]): Unit = {
+    val n = args.headOption.fold(10000000L)(_.toLong)
+    val spark = Bench.session(Bench.envCpus, Bench.envCpus, Bench.DefaultSplitBytes)
 
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"""{"job":"$label","sec":$s%.2f,"rows":$rows,"points":$n,"points_per_s":${(n / s).toLong}}""")
-    }
+    def time(label: String)(f: => Long): Unit =
+      Bench.printJob(label, (_, s) => s""""points":$n,"points_per_s":${(n / s).toLong}""")(f)
 
-    // worldwide quasi-random scatter; |lat| <= 85 keeps webmerc finite
-    val pts = spark.range(n).select(col("id").as("pt_id"),
-      (pmod(col("id") * lit(0.6180339887), lit(360.0)) - lit(180.0)).as("lon"),
-      (pmod(col("id") * lit(0.7548776662), lit(170.0)) - lit(85.0)).as("lat"))
+    val pts = Bench.scatter(spark, n)
+    val earthArea = 4.0 * math.Pi * 6371007.18 * 6371007.18
 
     // hot-spot z over ~100 km hexes: one N-row shuffle to ~60k cells,
     // then disk-explode + self-join on the cell frame only
@@ -71,8 +57,7 @@ object StatsBench {
     // ~6 true neighbors per point inside 10 km — tens of millions of
     // candidate pairs from the single cell-cover self-join
     time("ripleys_k_10km") {
-      val area = 4.0 * math.Pi * 6371007.18 * 6371007.18
-      SpatialStats.ripleysK(pts, Seq(2500.0, 5000.0, 10000.0), area)
+      SpatialStats.ripleysK(pts, Seq(2500.0, 5000.0, 10000.0), earthArea)
         .collect().map(_.getLong(2)).sum
     }
 
@@ -92,8 +77,7 @@ object StatsBench {
     // distance-join candidate stream (~6 neighbors/point) collapsed to
     // one exact-long row
     time("ann_stat_chord_10km")(
-      SpatialStats.annStatChord(pts,
-        4.0 * math.Pi * 6371007.18 * 6371007.18,
+      SpatialStats.annStatChord(pts, earthArea,
         graft.geo.engine.GeoEngine.maxChord2For(10000.0)).count())
     // CSR envelope at 10 km on a 1/100 sample x 19 sims: the whole
     // ensemble (observed + 19 null patterns, ~2M points) rides one
@@ -101,7 +85,7 @@ object StatsBench {
     time("l_envelope_10km_19sims_100k")(
       SpatialStats.lEnvelope(
         pts.where(pmod(col("pt_id"), lit(100)) === 0),
-        Seq(5000.0, 10000.0), 4.0 * math.Pi * 6371007.18 * 6371007.18,
+        Seq(5000.0, 10000.0), earthArea,
         nSims = 19).count())
     // Hausdorff trajectory join: n/10 points as 20-point tracks, two
     // tracks per route class ~18 km apart with a ~2 km twin; candidate
