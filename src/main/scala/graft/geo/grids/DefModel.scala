@@ -106,7 +106,7 @@ object DefModel {
   private val cache = TrieMap.empty[String, Model]
 
   def load(name: String): Model = {
-    val p = Grids.resolve(name).getOrElse(throw BadModel(s"no such file: $name"))
+    val p = Grids.resolve(name).getOrElse(throw Grids.GridMissing(name))
     cache.getOrElseUpdate(p.toString,
       parse(new String(Files.readAllBytes(p), "UTF-8")))
   }

@@ -287,9 +287,8 @@ object Grids {
     Array(new Array[Float](9)), Map.empty, hasNodata = false, 0.0f,
     Nil, isNull = true)
 
-  /** Load generic grids for the unified `gridshift` op; a missing
-    * required grid is a hard error there (matching the reference's
-    * file-not-found failure). */
+  /** Load generic grids for the unified `gridshift` op.  Throws
+    * [[GridMissing]] for a required grid that cannot be found. */
   def genericGridSets(spec: String): List[List[GenGrid]] =
     spec.split(',').toList.flatMap { raw =>
       val optional = raw.startsWith("@")
@@ -301,7 +300,7 @@ object Grids {
             TiffGrids.loadGeneric(p.getFileName.toString, loadBytes(p))))
           catch { case _: BadGrid if optional => None }
         case None if optional => None
-        case None => throw BadGrid(s"grid not found: $name")
+        case None => throw GridMissing(name)
       }
     }
 

@@ -39,7 +39,7 @@ object TinShift {
   private val cache = TrieMap.empty[String, TinModel]
 
   def load(name: String): TinModel = {
-    val p = Grids.resolve(name).getOrElse(throw BadModel(s"no such file: $name"))
+    val p = Grids.resolve(name).getOrElse(throw Grids.GridMissing(name))
     cache.getOrElseUpdate(p.toString, {
       val bytes = Files.readAllBytes(p)
       if (TinShiftGpkg.isSqlite(bytes)) TinShiftGpkg.parse(bytes)

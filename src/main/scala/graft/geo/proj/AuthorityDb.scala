@@ -60,7 +60,8 @@ object AuthorityDb {
 
   lazy val tables: Map[String, Vector[Array[String]]] =
     AuthoritySql.load(sqlDir.getOrElse(
-      throw Unsupported("authority database scripts (data/sql) not found")), wanted)
+      throw Unsupported("authority database scripts (data/sql) not found")
+        .initCause(Grids.GridMissing("sql/unit_of_measure.sql"))), wanted)
 
   private def key(auth: String, code: String) = auth.toUpperCase + ":" + code
 

@@ -360,19 +360,23 @@ object ProjString {
     case Some(v) => parseDouble(v)
   }
 
-  private def hgridsOf(spec: String) =
-    try Grids.hgridSets(spec)
+  /** Build a kernel that reads grid or model files.  A required file no
+    * search directory holds makes the operation [[Unsupported]] here (the
+    * gie runner's skip), with the [[Grids.GridMissing]] kept as the
+    * cause; a file that exists but does not parse is a [[BadProjString]]. */
+  private def loading[T](build: => T): T =
+    try build
     catch {
-      case Grids.GridMissing(n) => throw Unsupported(s"grid $n")
-      case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
+      case e: Grids.GridMissing =>
+        throw Unsupported(s"grid ${e.name}").initCause(e)
+      case e: Grids.BadGrid      => throw BadProjString(e.getMessage)
+      case e: DefModel.BadModel  => throw BadProjString(e.getMessage)
+      case e: TinShift.BadModel  => throw BadProjString(e.getMessage)
     }
 
-  private def vgridsOf(spec: String) =
-    try Grids.vgridSets(spec)
-    catch {
-      case Grids.GridMissing(n) => throw Unsupported(s"grid $n")
-      case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
-    }
+  private def hgridsOf(spec: String) = loading(Grids.hgridSets(spec))
+
+  private def vgridsOf(spec: String) = loading(Grids.vgridSets(spec))
 
   private def buildOne(proj: String, p0: Params): PointKernel = {
     val p = expandDatum(p0)
@@ -471,11 +475,7 @@ object ProjString {
       case "defmodel" =>
         val file = p.get("model")
           .getOrElse(throw BadProjString("defmodel needs +model"))
-        try DefModelKernel(DefModel.load(file), ell)
-        catch {
-          case e: DefModel.BadModel => throw BadProjString(e.getMessage)
-          case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
-        }
+        loading(DefModelKernel(DefModel.load(file), ell))
       case "xyzgridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("xyzgridshift needs +grids"))
@@ -484,10 +484,9 @@ object ProjString {
           case Some("output_crs")       => false
           case Some(o) => throw BadProjString(s"unsupported grid_ref $o")
         }
-        try XyzGridshiftKernel(Grids.genericGridSets(spec), ell,
+        loading(XyzGridshiftKernel(Grids.genericGridSets(spec), ell,
           gridRefIsInput = refIsInput,
-          multiplier = p.double("multiplier").getOrElse(1.0))
-        catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
+          multiplier = p.double("multiplier").getOrElse(1.0)))
       case "deformation" =>
         val hasGrids = p.has("grids")
         val hasXy = p.has("xy_grids")
@@ -500,29 +499,27 @@ object ProjString {
           throw BadProjString("deformation needs +dt or +t_epoch")
         if (dtv.isDefined && te.isDefined)
           throw BadProjString("+dt and +t_epoch are mutually exclusive")
-        try {
+        loading {
           val gen = if (hasGrids)
             Grids.genericGridSets(p.get("grids").get) else Nil
-          val hg = if (!hasGrids) hgridsOf(p.get("xy_grids").get) else Nil
-          val vg = if (!hasGrids) vgridsOf(p.get("z_grids").get) else Nil
+          val hg = if (!hasGrids) Grids.hgridSets(p.get("xy_grids").get) else Nil
+          val vg = if (!hasGrids) Grids.vgridSets(p.get("z_grids").get) else Nil
           DeformationKernel(gen, hg, vg, ell,
             dt = dtv.getOrElse(Double.NaN), tEpoch = te.getOrElse(Double.NaN))
-        } catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
+        }
       case "gridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("gridshift needs +grids"))
         val interp = p.get("interpolation").getOrElse("")
         if (interp.nonEmpty && interp != "bilinear" && interp != "biquadratic")
           throw BadProjString("unsupported value for +interpolation")
-        try GridshiftKernel(Grids.genericGridSets(spec),
+        loading(GridshiftKernel(Grids.genericGridSets(spec),
           interpolationOverride = interp,
-          noZTransform = p.flags.contains("no_z_transform"))
-        catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
+          noZTransform = p.flags.contains("no_z_transform")))
       case "tinshift" =>
         val file = p.get("file")
           .getOrElse(throw BadProjString("tinshift needs +file"))
-        try TinShiftKernel(TinShift.load(file))
-        catch { case e: TinShift.BadModel => throw BadProjString(e.getMessage) }
+        loading(TinShiftKernel(TinShift.load(file)))
       case "horner" =>
         def coefs(key: String, n: Int): Array[Double] = p.get(key) match {
           case None => null

@@ -115,4 +115,26 @@ class GridFetchSpec extends AnyFunSuite {
       assert(k.fwd(v))
     } finally { Grids.setNetworkEnabled(false); Grids.clearFetchers() }
   }
+
+  test("every grid- or model-reading operation reports an absent file as GridMissing") {
+    def absent(ext: String) = s"absent_${java.util.UUID.randomUUID()}.$ext"
+    val ops = Seq[(String, String, String => String)](
+      ("hgridshift", "gsb", f => s"+proj=hgridshift +grids=$f"),
+      ("vgridshift", "gtx", f => s"+proj=vgridshift +grids=$f"),
+      ("gridshift", "tif", f => s"+proj=gridshift +grids=$f"),
+      ("deformation", "tif", f => s"+proj=deformation +grids=$f +dt=1 +ellps=GRS80"),
+      ("defmodel", "json", f => s"+proj=defmodel +model=$f"),
+      ("tinshift", "json", f => s"+proj=tinshift +file=$f"))
+    for ((op, ext, spec) <- ops) {
+      val name = absent(ext)
+      val e = intercept[ProjString.Unsupported](ProjString.parse(spec(name)))
+      e.getCause match {
+        case m: Grids.GridMissing => assert(m.name == name, op)
+        case other => fail(s"$op: cause $other")
+      }
+    }
+    // a malformed operation stays a parse error, whatever its files
+    intercept[ProjString.BadProjString](
+      ProjString.parse(s"+proj=deformation +grids=${absent("tif")} +ellps=GRS80"))
+  }
 }
