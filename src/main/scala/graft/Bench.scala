@@ -206,7 +206,7 @@ object Bench {
     * grid resolves. */
   def missingGrid(name: String): Option[String] =
     if (Grids.available(name)) None
-    else Some(s"grid not found: $name; searched ${Grids.searchDirs.mkString(", ")}")
+    else Some(Grids.GridMissing(name).getMessage)
 
   /** NTv2 grid shift over France, degrees in and out (ntf_r93.gsb ships
     * with the reference tests). */

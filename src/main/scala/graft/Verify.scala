@@ -8,8 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for focused
     // local runs (the driver always passes exactly two args)
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only = args.lift(2).map(queryFilter)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -33,6 +32,19 @@ object Verify {
     spark.stop()
   }
 
+  /** The query names in a comma-separated filter.  An unknown name is an
+    * error that lists the valid ones: a typo must not silently run zero
+    * queries. */
+  private[graft] def queryFilter(arg: String): Set[String] = {
+    val names = arg.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val known = SparkEntry.queries.keySet
+    val unknown = names -- known
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"valid names: ${known.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness. */
@@ -48,9 +60,9 @@ object Verify {
 
   /** The oracle_sql.json body for `build`'s (query name -> SQL) map.  A
     * failed oracle BUILDER must never cost the round's whole compare:
-    * risky builders are individually guarded inside SparkEntry.oracleSql
-    * (entries degrade to rows-only), and this outer net still writes
-    * well-formed JSON if map construction throws — as
+    * SparkEntry.oracleSql builds each oracle on its own (an absent asset
+    * degrades only that entry to rows-only), and this outer net still
+    * writes well-formed JSON if map construction throws — as
     * `{"_oracle_error": "<message>"}`, so lost coverage is visible in the
     * file, not an empty map. */
   private[graft] def oracleJson(build: => Map[String, String]): String =

@@ -104,8 +104,11 @@ object Grids {
   final val RelTol = 1e-5 // REL_TOLERANCE_HGRIDSHIFT, grids.cpp:2760
   private final val ArcSecToRad = (math.Pi / 180.0) / 3600.0
 
+  /** A required grid, model or data file that no search directory holds;
+    * the message names every directory tried. */
   final case class GridMissing(name: String)
-      extends RuntimeException(s"grid not found: $name")
+      extends RuntimeException(
+        s"grid not found: $name; searched ${searchDirs.mkString(", ")}")
   final case class BadGrid(msg: String) extends RuntimeException(msg)
 
   /** Programmatic additions to the grid search path — the

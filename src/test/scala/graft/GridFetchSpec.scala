@@ -129,7 +129,10 @@ class GridFetchSpec extends AnyFunSuite {
       val name = absent(ext)
       val e = intercept[ProjString.Unsupported](ProjString.parse(spec(name)))
       e.getCause match {
-        case m: Grids.GridMissing => assert(m.name == name, op)
+        case m: Grids.GridMissing =>
+          assert(m.name == name, op)
+          assert(m.getMessage.startsWith(s"grid not found: $name; searched "))
+          Grids.searchDirs.foreach(d => assert(m.getMessage.contains(d), s"$op: $d"))
         case other => fail(s"$op: cause $other")
       }
     }

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.geo.grids.Grids
+import graft.geo.proj.ProjString
+import graft.queries.{NoOracle, Query, Sql}
 
 class VerifySpec extends AnyFunSuite {
 
@@ -12,5 +17,32 @@ class VerifySpec extends AnyFunSuite {
   test("a throwing oracle builder leaves a marker, not an empty map") {
     val json = Verify.oracleJson(throw new IllegalStateException("grid \"x\" missing"))
     assert(json == """{"_oracle_error": "grid \"x\" missing"}""")
+  }
+
+  test("the query filter rejects an unknown name and lists the valid ones") {
+    assert(Verify.queryFilter("q_webmerc_fwd, q_tile_assign") ==
+      Set("q_webmerc_fwd", "q_tile_assign"))
+    val e = intercept[IllegalArgumentException](
+      Verify.queryFilter("q_webmerc_fwd,q_webmerc_fdw"))
+    assert(e.getMessage.contains("q_webmerc_fdw"))
+    SparkEntry.queries.keys.foreach(n => assert(e.getMessage.contains(n), n))
+  }
+
+  test("only a missing-asset oracle builder loses its own entry") {
+    val noPlan: (SparkSession, String) => DataFrame = (_, _) => ???
+    def q(name: String, sql: => String) = Query(name, noPlan, Sql(sql))
+    val gridMissing = ProjString.Unsupported("grid absent.tif")
+      .initCause(Grids.GridMissing("absent.tif"))
+    val built = SparkEntry.oraclesOf(Seq(
+      q("q_ok", "SELECT 1 AS x"),
+      q("q_grid", throw Grids.GridMissing("absent.gsb")),
+      q("q_wrapped", throw gridMissing),
+      Query("q_rows", noPlan, NoOracle("rows-only here"))))
+    assert(built == Map("q_ok" -> "SELECT 1 AS x"))
+    // any other builder failure is a regression and must propagate
+    intercept[MatchError](SparkEntry.oraclesOf(Seq(
+      q("q_ok", "SELECT 1 AS x"), q("q_bug", throw new MatchError(1)))))
+    intercept[ProjString.Unsupported](SparkEntry.oraclesOf(Seq(
+      q("q_op", throw ProjString.Unsupported("proj=nope")))))
   }
 }
