@@ -39,6 +39,8 @@ object Verify {
     val names = arg.split(",").map(_.trim).filter(_.nonEmpty).toSet
     val known = SparkEntry.queries.keySet
     val unknown = names -- known
+    require(names.nonEmpty, s"empty query filter '$arg'; valid names: " +
+      known.toSeq.sorted.mkString(", "))
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
         s"valid names: ${known.toSeq.sorted.mkString(", ")}")

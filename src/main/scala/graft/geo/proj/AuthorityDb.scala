@@ -59,9 +59,17 @@ object AuthorityDb {
     "vertical_crs", "compound_crs", "alias_name", "supersession")
 
   lazy val tables: Map[String, Vector[Array[String]]] =
-    AuthoritySql.load(sqlDir.getOrElse(
-      throw Unsupported("authority database scripts (data/sql) not found")
-        .initCause(Grids.GridMissing("sql/unit_of_measure.sql"))), wanted)
+    AuthoritySql.load(sqlDir.getOrElse(throw sqlMissing), wanted)
+
+  /** Every place [[sqlDir]] looked; the [[Grids.GridMissing]] cause marks
+    * the scripts as an absent asset, not an unsupported operation. */
+  private def sqlMissing: Throwable = {
+    val env = sys.env.get("GRAFT_AUTHORITY_SQL")
+      .fold("GRAFT_AUTHORITY_SQL unset")(d => s"GRAFT_AUTHORITY_SQL=$d not a directory")
+    Unsupported(s"authority database scripts (data/sql) not found: $env; " +
+      s"no sql/unit_of_measure.sql under ${Grids.searchDirs.mkString(", ")}")
+      .initCause(Grids.GridMissing("sql/unit_of_measure.sql"))
+  }
 
   private def key(auth: String, code: String) = auth.toUpperCase + ":" + code
 

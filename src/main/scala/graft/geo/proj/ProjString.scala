@@ -361,22 +361,33 @@ object ProjString {
   }
 
   /** Build a kernel that reads grid or model files.  A required file no
-    * search directory holds makes the operation [[Unsupported]] here (the
-    * gie runner's skip), with the [[Grids.GridMissing]] kept as the
-    * cause; a file that exists but does not parse is a [[BadProjString]]. */
+    * search directory holds, or one that does not parse, fails the build
+    * as a [[BadProjString]] (gie's `expect failure` on a missing file); an
+    * absent file keeps its [[Grids.GridMissing]] as the cause. */
   private def loading[T](build: => T): T =
     try build
     catch {
       case e: Grids.GridMissing =>
-        throw Unsupported(s"grid ${e.name}").initCause(e)
+        throw BadProjString(e.getMessage).initCause(e)
       case e: Grids.BadGrid      => throw BadProjString(e.getMessage)
       case e: DefModel.BadModel  => throw BadProjString(e.getMessage)
       case e: TinShift.BadModel  => throw BadProjString(e.getMessage)
     }
 
-  private def hgridsOf(spec: String) = loading(Grids.hgridSets(spec))
+  /** hgridshift/vgridshift grids: an absent one makes the operation
+    * [[Unsupported]] instead (the gie runner's skip), the
+    * [[Grids.GridMissing]] again kept as the cause. */
+  private def shiftGrids[T](load: => T): T =
+    try load
+    catch {
+      case e: Grids.GridMissing =>
+        throw Unsupported(s"grid ${e.name}").initCause(e)
+      case e: Grids.BadGrid => throw BadProjString(e.getMessage)
+    }
 
-  private def vgridsOf(spec: String) = loading(Grids.vgridSets(spec))
+  private def hgridsOf(spec: String) = shiftGrids(Grids.hgridSets(spec))
+
+  private def vgridsOf(spec: String) = shiftGrids(Grids.vgridSets(spec))
 
   private def buildOne(proj: String, p0: Params): PointKernel = {
     val p = expandDatum(p0)
@@ -502,8 +513,8 @@ object ProjString {
         loading {
           val gen = if (hasGrids)
             Grids.genericGridSets(p.get("grids").get) else Nil
-          val hg = if (!hasGrids) Grids.hgridSets(p.get("xy_grids").get) else Nil
-          val vg = if (!hasGrids) Grids.vgridSets(p.get("z_grids").get) else Nil
+          val hg = if (!hasGrids) hgridsOf(p.get("xy_grids").get) else Nil
+          val vg = if (!hasGrids) vgridsOf(p.get("z_grids").get) else Nil
           DeformationKernel(gen, hg, vg, ell,
             dt = dtv.getOrElse(Double.NaN), tEpoch = te.getOrElse(Double.NaN))
         }

@@ -118,16 +118,20 @@ class GridFetchSpec extends AnyFunSuite {
 
   test("every grid- or model-reading operation reports an absent file as GridMissing") {
     def absent(ext: String) = s"absent_${java.util.UUID.randomUUID()}.$ext"
-    val ops = Seq[(String, String, String => String)](
-      ("hgridshift", "gsb", f => s"+proj=hgridshift +grids=$f"),
-      ("vgridshift", "gtx", f => s"+proj=vgridshift +grids=$f"),
-      ("gridshift", "tif", f => s"+proj=gridshift +grids=$f"),
-      ("deformation", "tif", f => s"+proj=deformation +grids=$f +dt=1 +ellps=GRS80"),
-      ("defmodel", "json", f => s"+proj=defmodel +model=$f"),
-      ("tinshift", "json", f => s"+proj=tinshift +file=$f"))
-    for ((op, ext, spec) <- ops) {
+    // hgridshift/vgridshift skip an absent grid as Unsupported; the others
+    // fail to build (BadProjString), as gie's `expect failure` wants
+    val ops = Seq[(String, String, String => String, Class[_])](
+      ("hgridshift", "gsb", f => s"+proj=hgridshift +grids=$f", classOf[ProjString.Unsupported]),
+      ("vgridshift", "gtx", f => s"+proj=vgridshift +grids=$f", classOf[ProjString.Unsupported]),
+      ("gridshift", "tif", f => s"+proj=gridshift +grids=$f", classOf[ProjString.BadProjString]),
+      ("deformation", "tif", f => s"+proj=deformation +grids=$f +dt=1 +ellps=GRS80",
+        classOf[ProjString.BadProjString]),
+      ("defmodel", "json", f => s"+proj=defmodel +model=$f", classOf[ProjString.BadProjString]),
+      ("tinshift", "json", f => s"+proj=tinshift +file=$f", classOf[ProjString.BadProjString]))
+    for ((op, ext, spec, wrapper) <- ops) {
       val name = absent(ext)
-      val e = intercept[ProjString.Unsupported](ProjString.parse(spec(name)))
+      val e = intercept[RuntimeException](ProjString.parse(spec(name)))
+      assert(e.getClass == wrapper, s"$op: $e")
       e.getCause match {
         case m: Grids.GridMissing =>
           assert(m.name == name, op)
@@ -136,8 +140,9 @@ class GridFetchSpec extends AnyFunSuite {
         case other => fail(s"$op: cause $other")
       }
     }
-    // a malformed operation stays a parse error, whatever its files
-    intercept[ProjString.BadProjString](
+    // a malformed operation stays a parse error with no missing-asset cause
+    val bad = intercept[ProjString.BadProjString](
       ProjString.parse(s"+proj=deformation +grids=${absent("tif")} +ellps=GRS80"))
+    assert(bad.getCause == null)
   }
 }

@@ -34,10 +34,10 @@ class OracleContractSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == names.toSet)
     val sql = reg.collect { case q if q.oracle.isInstanceOf[Sql] => q.name }
     assert(sql.size == 95, s"oracled count moved: ${sql.size} (update this pin)")
-    val noOracle = reg.collect { case q @ Query(_, _, NoOracle(why)) => q.name -> why }
-    assert(noOracle.map(_._1).toSet == rowsOnly,
-      s"rows-only set drifted: ${noOracle.map(_._1).sorted}")
-    noOracle.foreach { case (n, why) => assert(why.trim.nonEmpty, s"$n gives no reason") }
+    val noOracle = reg.collect { case q @ Query(_, _, NoOracle(_)) => q.name }
+    assert(noOracle.toSet == rowsOnly, s"rows-only set drifted: ${noOracle.sorted}")
+    // a blank reason cannot be built (NoOracle's constructor refuses it)
+    intercept[IllegalArgumentException](NoOracle(" "))
   }
 
   test("oracle coverage is pinned: 95 of 107 queries hash-verified") {

@@ -26,17 +26,26 @@ class VerifySpec extends AnyFunSuite {
       Verify.queryFilter("q_webmerc_fwd,q_webmerc_fdw"))
     assert(e.getMessage.contains("q_webmerc_fdw"))
     SparkEntry.queries.keys.foreach(n => assert(e.getMessage.contains(n), n))
+    // an empty filter would run zero queries just as silently
+    for (empty <- Seq("", ",", " , ")) {
+      val e = intercept[IllegalArgumentException](Verify.queryFilter(empty))
+      assert(e.getMessage.contains("q_webmerc_fwd"), empty)
+    }
   }
 
   test("only a missing-asset oracle builder loses its own entry") {
     val noPlan: (SparkSession, String) => DataFrame = (_, _) => ???
     def q(name: String, sql: => String) = Query(name, noPlan, Sql(sql))
-    val gridMissing = ProjString.Unsupported("grid absent.tif")
+    // ProjString's two wrappings of an absent file (hgridshift, gridshift)
+    val skipped = ProjString.Unsupported("grid absent.gsb")
+      .initCause(Grids.GridMissing("absent.gsb"))
+    val failed = ProjString.BadProjString("grid not found: absent.tif")
       .initCause(Grids.GridMissing("absent.tif"))
     val built = SparkEntry.oraclesOf(Seq(
       q("q_ok", "SELECT 1 AS x"),
       q("q_grid", throw Grids.GridMissing("absent.gsb")),
-      q("q_wrapped", throw gridMissing),
+      q("q_skipped", throw skipped),
+      q("q_failed", throw failed),
       Query("q_rows", noPlan, NoOracle("rows-only here"))))
     assert(built == Map("q_ok" -> "SELECT 1 AS x"))
     // any other builder failure is a regression and must propagate
@@ -44,5 +53,7 @@ class VerifySpec extends AnyFunSuite {
       q("q_ok", "SELECT 1 AS x"), q("q_bug", throw new MatchError(1)))))
     intercept[ProjString.Unsupported](SparkEntry.oraclesOf(Seq(
       q("q_op", throw ProjString.Unsupported("proj=nope")))))
+    intercept[ProjString.BadProjString](SparkEntry.oraclesOf(Seq(
+      q("q_typo", throw ProjString.BadProjString("no +proj= in 'x'")))))
   }
 }
